@@ -32,6 +32,8 @@ boundaries and word-final units stay distinct from word-internal ones.
 
 from __future__ import annotations
 
+import re
+
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -40,6 +42,10 @@ from pyspark.sql.functions import pandas_udf
 __all__ = ["word_counts", "bpe_pair_counts", "bpe_train", "bpe_encode"]
 
 _EOW = "</w>"
+
+# Java's ``\s`` (what ``_words`` splits on): ASCII whitespace only. Python's
+# ``str.split()`` and ``re``'s ``\s`` also split on \xa0, \x1c-\x1f, \x85
+_JAVA_WS = re.compile(r"[ \t\n\x0b\f\r]+")
 
 
 def _words(text: Column) -> Column:
@@ -354,7 +360,7 @@ def bpe_encode(
 
         n_words, n_tok = [], []
         for t in text:
-            ws = [w for w in (t or "").lower().split() if w]
+            ws = [w for w in _JAVA_WS.split((t or "").lower()) if w]
             n_words.append(len(ws))
             n_tok.append(sum(word_len(w) for w in ws))
         return pd.DataFrame({"n_words": n_words, "n_bpe_tokens": n_tok})

@@ -11,6 +11,12 @@ execution; AQE coalesces partitions and splits skewed joins at runtime) and
 optionally checkpointed to parquet for resume (north rule). The two pandas
 UDF stages (mention extraction, pair scoring) are Arrow-batched.
 
+The chain from vertices to the id-map exists once, in
+``EntityResolutionPipeline._resolve``. Both entry points run it, with its
+stage checkpoints and lineage hooks: ``EntityResolutionPipeline.run``
+(transcripts → assemble → mentions → chain → MENTIONS edges) and
+``resolve_from_mentions`` (typed mentions → chain).
+
 Shuffle inventory at 10^12-turn scale — every wide op is keyed:
   assemble    1 shuffle on conv_id (partial agg map-side)
   vertices    1 shuffle on node_id (distinct surfaces ≪ mention instances)
@@ -67,9 +73,7 @@ class PipelineConfig:
 
 
 @dataclass
-class PipelineResult:
-    conversations: DataFrame
-    mentions: DataFrame
+class ResolutionResult:
     vertices: DataFrame
     pairs: DataFrame
     scored: DataFrame
@@ -77,6 +81,12 @@ class PipelineResult:
     components: DataFrame
     entities: DataFrame
     id_map: DataFrame
+
+
+@dataclass
+class PipelineResult(ResolutionResult):
+    conversations: DataFrame
+    mentions: DataFrame
     mention_edges: DataFrame
 
 
@@ -142,26 +152,16 @@ class EntityResolutionPipeline:
             self.lineage.partition_counts(name, df)
         return df
 
-    # -- public API --------------------------------------------------------
-
-    def run(
-        self,
-        transcripts: DataFrame,
-        name_embeddings: DataFrame | None = None,
-        fingerprint: str = "",
-    ) -> PipelineResult:
-        """Execute the full pipeline. ``fingerprint`` identifies the input
-        (e.g. its path + snapshot); stages re-use checkpoints when it is
-        unchanged."""
+    def _fingerprint(self, fingerprint: str) -> str:
         cfg = self.config
-        fp = f"{fingerprint}|mb={cfg.max_block_size}|mh={cfg.minhash_hashes}x{cfg.minhash_bands}|rt={cfg.scoring.ratio_threshold}|et={cfg.scoring.embedding_threshold}"
+        return f"{fingerprint}|mb={cfg.max_block_size}|mh={cfg.minhash_hashes}x{cfg.minhash_bands}|rt={cfg.scoring.ratio_threshold}|et={cfg.scoring.embedding_threshold}"
 
-        conversations = self._stage(
-            "conversations", fp, lambda: assemble_conversations(transcripts)
-        )
-        mentions = self._stage(
-            "mentions", fp, lambda: extract_mentions(conversations)
-        )
+    def _resolve(
+        self, mentions: DataFrame, name_embeddings: DataFrame | None, fp: str
+    ) -> ResolutionResult:
+        """vertices → blocking → scoring → edges → clustering → entities →
+        id-map: the stage chain both entry points share."""
+        cfg = self.config
         vertices = self._stage(
             "vertices", fp, lambda: distinct_vertices(mentions)
         )
@@ -247,7 +247,6 @@ class EntityResolutionPipeline:
         # dragging the full upstream DAG into planning (~500 exchanges),
         # and so AQE sees its true size and broadcasts it
         id_map = build_id_map(components, entities).localCheckpoint(eager=True)
-        mention_edges = build_mention_edges(mentions, id_map)
 
         if self.lineage is not None:
             for nm, df in (
@@ -257,9 +256,7 @@ class EntityResolutionPipeline:
             ):
                 self.lineage.scalar(nm, "rows", df.count())
 
-        return PipelineResult(
-            conversations=conversations,
-            mentions=mentions,
+        return ResolutionResult(
             vertices=vertices,
             pairs=pairs,
             scored=scored,
@@ -267,29 +264,33 @@ class EntityResolutionPipeline:
             components=components,
             entities=entities,
             id_map=id_map,
-            mention_edges=mention_edges,
         )
 
+    # -- public API --------------------------------------------------------
 
-def resolve_entities(
-    spark: SparkSession,
-    transcripts: DataFrame,
-    name_embeddings: DataFrame | None = None,
-    config: PipelineConfig | None = None,
-) -> DataFrame:
-    """One-call convenience: transcripts → canonical entities DataFrame."""
-    pipe = EntityResolutionPipeline(spark, config)
-    return pipe.run(transcripts, name_embeddings=name_embeddings).entities
-
-
-@dataclass
-class ResolutionResult:
-    vertices: DataFrame
-    pairs: DataFrame
-    edges: DataFrame
-    components: DataFrame
-    entities: DataFrame
-    id_map: DataFrame
+    def run(
+        self,
+        transcripts: DataFrame,
+        name_embeddings: DataFrame | None = None,
+        fingerprint: str = "",
+    ) -> PipelineResult:
+        """Execute the full pipeline. ``fingerprint`` identifies the input
+        (e.g. its path + snapshot); stages re-use checkpoints when it is
+        unchanged."""
+        fp = self._fingerprint(fingerprint)
+        conversations = self._stage(
+            "conversations", fp, lambda: assemble_conversations(transcripts)
+        )
+        mentions = self._stage(
+            "mentions", fp, lambda: extract_mentions(conversations)
+        )
+        res = self._resolve(mentions, name_embeddings, fp)
+        return PipelineResult(
+            **vars(res),
+            conversations=conversations,
+            mentions=mentions,
+            mention_edges=build_mention_edges(mentions, res.id_map),
+        )
 
 
 def resolve_from_mentions(
@@ -303,51 +304,19 @@ def resolve_from_mentions(
     reference's resolver API and its labeled tests operate at
     (test_entity_resolution.py drives ``EntityResolver.resolve`` directly).
 
-    Adds norm/node_id if missing, then blocking → scoring → clustering →
-    canonical entities.
+    Adds norm/node_id if missing, then runs the same stage chain as
+    ``EntityResolutionPipeline.run``, with its checkpoint and lineage hooks.
+    Its stage checkpoints carry no input fingerprint, so a ``workdir``
+    resumes whatever mentions it last resolved: use one per input.
     """
     from neuronews_spark.functions.normalize import node_id as node_id_col
     from neuronews_spark.functions.normalize import normalize_name
 
-    cfg = config or PipelineConfig()
     m = mentions
     if "norm" not in m.columns:
         m = m.withColumn("norm", normalize_name(F.col("name"), F.col("entity_type")))
     m = m.filter(F.col("norm") != "")
     if "node_id" not in m.columns:
         m = m.withColumn("node_id", node_id_col(F.col("entity_type"), F.col("name")))
-
-    # vertices feed blocking, clustering, and the entity build — pin once
-    # (the mention-extraction pandas UDF upstream is the expensive part)
-    vertices = distinct_vertices(m).persist()
-    blocks = build_blocks(
-        vertices, n_hashes=cfg.minhash_hashes, bands=cfg.minhash_bands
-    )
-    if name_embeddings is not None:
-        blocks = blocks.unionByName(embedding_blocks(vertices, name_embeddings))
-    pairs, _capped = candidate_pairs(blocks, max_block_size=cfg.max_block_size)
-    scored = score_pairs(pairs, cfg.scoring)
-    if name_embeddings is not None:
-        scored = scored.persist()
-    edges = matched_edges(scored)
-    if name_embeddings is not None:
-        edges = edges.unionByName(
-            score_embedding_pairs(
-                scored.filter(~F.col("matched")), name_embeddings, cfg.scoring
-            )
-        )
-    components = components_for_vertices(
-        vertices.select("node_id"),
-        edges.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst")),
-        max_iterations=cfg.max_cc_iterations,
-    )
-    entities = build_entities(vertices, components)
-    id_map = build_id_map(components, entities).localCheckpoint(eager=True)
-    return ResolutionResult(
-        vertices=vertices,
-        pairs=pairs,
-        edges=edges,
-        components=components,
-        entities=entities,
-        id_map=id_map,
-    )
+    pipe = EntityResolutionPipeline(spark, config)
+    return pipe._resolve(m, name_embeddings, pipe._fingerprint(""))

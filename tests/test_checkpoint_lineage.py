@@ -5,12 +5,17 @@ from __future__ import annotations
 import json
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from neuronews_spark.checkpoint import StageCheckpoint
 from neuronews_spark.lineage import LineageWriter
-from neuronews_spark.pipeline import EntityResolutionPipeline, PipelineConfig
-from neuronews_spark.sources.synthetic import synthetic_transcripts
+from neuronews_spark.pipeline import (
+    EntityResolutionPipeline,
+    PipelineConfig,
+    resolve_from_mentions,
+)
+from neuronews_spark.sources.synthetic import name_embeddings_df, synthetic_transcripts
 
 
 def test_stage_checkpoint_memoizes_and_invalidates(spark, tmp_path):
@@ -72,6 +77,41 @@ def test_pipeline_resume_skips_completed_stages(spark, tmp_path):
     assert res3.entities.count() == 0
 
 
+def _rows(df):
+    return sorted(map(tuple, df.collect()))
+
+
+@pytest.mark.parametrize("embeddings", [False, True])
+def test_resolve_from_mentions_matches_run(spark, embeddings):
+    """Both entry points run one chain: resolving ``run``'s own mentions
+    reproduces its entities and id map, with and without the embedding
+    blocking path."""
+    ne = name_embeddings_df(spark) if embeddings else None
+    t = synthetic_transcripts(spark, n_turns=3000)
+    res = EntityResolutionPipeline(spark).run(t, name_embeddings=ne)
+    sub = resolve_from_mentions(spark, res.mentions, name_embeddings=ne)
+    assert _rows(res.entities)
+    assert _rows(sub.entities) == _rows(res.entities)
+    assert _rows(sub.id_map) == _rows(res.id_map)
+
+
+def test_resolve_from_mentions_writes_lineage(spark, tmp_path):
+    """The mention-level entry point gets run's lineage hooks: block
+    stats and per-stage partition rows for every stage of the chain."""
+    t = synthetic_transcripts(spark, n_turns=3000)
+    mentions = EntityResolutionPipeline(spark).run(t).mentions
+    lin = str(tmp_path / "lin")
+    resolve_from_mentions(
+        spark, mentions, config=PipelineConfig(lineage_dir=lin, run_id="m1")
+    )
+    rows = LineageWriter(spark, lin).read().collect()
+    assert rows and all(r["run_id"] == "m1" for r in rows)
+    blocking = {r["metric"]: r["value"] for r in rows if r["stage"] == "blocking"}
+    assert blocking["n_blocks"] > 0 and blocking["max_block_size_seen"] > 0
+    staged = {r["stage"] for r in rows if r["metric"] == "partition_rows"}
+    assert staged == {"vertices", "blocking", "scoring", "edges", "clustering", "entities"}
+
+
 def test_lineage_partition_counts_and_metrics(spark, tmp_path):
     lw = LineageWriter(spark, str(tmp_path / "lin"), run_id="t1")
     df = spark.range(100).repartition(4)
@@ -107,8 +147,6 @@ def test_crash_between_scoring_and_clustering_resumes_byte_identical(
     stages, (b) produces byte-identical entities to an uninterrupted
     run, and (c) leaves lineage rows recording exactly which stages were
     resumed from checkpoint."""
-    import pytest
-
     import neuronews_spark.pipeline as P
 
     t = synthetic_transcripts(spark, n_turns=400, turns_per_conv=10)

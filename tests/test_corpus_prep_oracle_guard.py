@@ -19,6 +19,9 @@ driver's hash compare:
 
 from __future__ import annotations
 
+import ast
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -30,6 +33,11 @@ from neuronews_spark.operators.dedup import (
 )
 
 SFS = ["/root/testdata/sf0.001", "/root/testdata/sf0.01"]
+CHECK_ORACLES = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    "scripts",
+    "check_oracles.py",
+)
 
 
 def _exact_pairs(docs):
@@ -100,3 +108,19 @@ def test_recall_margin_no_borderline_pairs(spark, sf):
         "pairs in the LSH recall-risk band [0.8, 0.85) — the corpus_prep "
         f"oracle's losslessness margin is gone: {borderline[:5]}"
     )
+
+
+def test_compare_scale_is_guarded():
+    """sf0.01 is the contracted compare scale. ``scripts/check_oracles.py``
+    mirrors the driver's compare at its default ``SF``; raising that
+    default without adding the scale to ``SFS`` fails here instead of
+    flaking the driver."""
+    with open(CHECK_ORACLES) as f:
+        tree = ast.parse(f.read())
+    (default,) = [
+        node.value.args[1].value
+        for node in tree.body
+        if isinstance(node, ast.Assign)
+        and [getattr(t, "id", None) for t in node.targets] == ["SF"]
+    ]
+    assert default in SFS

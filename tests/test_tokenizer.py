@@ -6,6 +6,7 @@ argmax, repeat)."""
 from __future__ import annotations
 
 import random
+import re
 from collections import Counter
 
 from pyspark.sql import functions as F
@@ -17,11 +18,17 @@ from neuronews_spark.operators.tokenizer import (
 )
 
 
+def _words(t: str) -> list[str]:
+    """The trainer's token convention: Spark splits on Java's ``\\s+``,
+    which is ASCII whitespace only."""
+    return [w for w in re.split(r"[ \t\n\x0b\f\r]+", t.lower()) if w]
+
+
 def _python_bpe(texts: list[str], n_merges: int):
     """Sennrich's algorithm verbatim: vocab of symbol tuples keyed by
     word, greedy left-to-right non-overlapping merge application, total
     tie-break (freq DESC, left ASC, right ASC)."""
-    wc = Counter(w for t in texts for w in t.lower().split())
+    wc = Counter(w for t in texts for w in _words(t))
     vocab = {tuple(list(w) + ["</w>"]): c for w, c in wc.items()}
     merges = []
     for step in range(1, n_merges + 1):
@@ -93,7 +100,7 @@ def test_bpe_pair_counts_equals_first_python_iteration(spark):
     docs = spark.createDataFrame(
         [(i, t) for i, t in enumerate(texts)], ["doc_id", "text"]
     )
-    wc = Counter(w for t in texts for w in t.lower().split())
+    wc = Counter(w for t in texts for w in _words(t))
     expect: Counter = Counter()
     for w, c in wc.items():
         sym = list(w) + ["</w>"]
@@ -160,6 +167,9 @@ def test_bpe_encode_matches_python_and_trainer_state(spark):
              for _ in range(30)]
     texts = [" ".join(rng.choice(words) for _ in range(rng.randint(2, 15)))
              for _ in range(25)]
+    # \xa0 and \x1c stay inside words, as in the trainer; \x0b splits:
+    # 4 words, where Python's str.split() finds 6
+    texts.append("caf\xa0au\x1clait x y\x0bz")
     docs = spark.createDataFrame(
         [(i, t) for i, t in enumerate(texts)], ["doc_id", "text"]
     )
@@ -172,12 +182,12 @@ def test_bpe_encode_matches_python_and_trainer_state(spark):
         (r["left"], r["right"]): r["step"] for r in merges.collect()
     }
     for i, t in enumerate(texts):
-        ws = t.lower().split()
+        ws = _words(t)
         assert got[i] == (len(ws), sum(_python_encode_len(w, rank) for w in ws))
     # encode(training corpus) reproduces the trainer's final symbol
     # state: total bpe tokens == Σ |final vocab symbols| · freq
     py_merges = _python_bpe(texts, 10)
-    vocab = Counter(w for t in texts for w in t.lower().split())
+    vocab = Counter(w for t in texts for w in _words(t))
     sym_state = {tuple(list(w) + ["</w>"]): c for w, c in vocab.items()}
     for _, left, right, _f in py_merges:
         new_state = {}
@@ -213,7 +223,7 @@ def _python_bpe_batched(texts: list[str], n_merges: int, batch_k: int):
     tie-break ordered candidates cut at max(4*want, 16), greedy
     symbol-disjoint selection (left, right, AND the concatenation), all
     kept merges applied in one left-to-right pass."""
-    wc = Counter(w for t in texts for w in t.lower().split())
+    wc = Counter(w for t in texts for w in _words(t))
     vocab = {tuple(list(w) + ["</w>"]): c for w, c in wc.items()}
     merges = []
     step = 0
