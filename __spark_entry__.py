@@ -3383,7 +3383,8 @@ def _bpe_chain_ctes(n_merges: int) -> str:
           FROM (
             SELECT word, count(*)::bigint AS freq FROM (
               SELECT unnest(list_filter(
-                string_split_regex(lower(coalesce(text, '')), '\\s+'),
+                string_split_regex(lower(coalesce(text, '')),
+                                   '[ \\t\\n\\x0b\\f\\r]+'),
                 x -> x <> '')) AS word
               FROM documents)
             GROUP BY word))"""]
@@ -3448,7 +3449,8 @@ def _bpe_token_counts_sql(n_merges: int = 12) -> str:
           FROM w{n_merges}),
         dwords AS (
           SELECT doc_id, unnest(list_filter(
-            string_split_regex(lower(coalesce(text, '')), '\\s+'),
+            string_split_regex(lower(coalesce(text, '')),
+                               '[ \\t\\n\\x0b\\f\\r]+'),
             x -> x <> '')) AS word
           FROM documents),
         agg AS (

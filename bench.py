@@ -9,85 +9,28 @@ COMPACT JSON line::
    "er":{"n_turns":N,"turns_per_sec":T},
    "er_stress":{"n_turns":10000000,"turns_per_sec":...,
                 "n_blocks":...,"n_capped_blocks":...,"cap_hit_rate":...},
-   "scaling":{"cores_n":2,"cores_4n":8,"efficiency":...,...},
+   "scaling":{"cores_n":1,"cores_4n":4,"efficiency":...,...},
    "detail":"docs/bench_detail_latest.json"}
 
 The printed line carries headline numbers ONLY (the driver tail-captures a
-bounded number of bytes); the full record including every per-sample
-scaling measurement is written to the ``detail`` sidecar file.
+bounded number of bytes); the full record, including every scaling
+sample, is written to the ``detail`` sidecar file.
 
-The scaling block evidences the north rule's two-cluster-size criterion in
-this sandbox: the identical ER job runs at N and 4N cores on the same
-input; efficiency = (throughput_4N / throughput_N) / 4.
-
-Each leg runs in a SUBPROCESS bound with ``taskset -c 0..cores-1`` to
-exactly that many vCPUs — a bare ``local[2]`` JVM on a 32-vCPU host is NOT
-a 2-core measurement (GC, netty, parquet, and Arrow threads run
-unconstrained, inflating the small-cluster baseline and deflating measured
-efficiency). CPU affinity is the honest stand-in for an executor count.
-
-This microVM's vCPUs are host-oversubscribed: identical runs measure up to
-3-10x apart across multi-minute noise windows (documented in
-docs/ARCHITECTURE.md). Two instruments make the measurement honest anyway:
-
-  1. STEAL ACCOUNTING — each timed window's hypervisor-steal fraction is
-     read from /proc/stat (field 8) on the leg's taskset CPU set;
-     t_corrected = t×(1−steal) removes co-tenant contention that is
-     unambiguously not the job's doing (idle vCPUs accrue no steal, so
-     serial phases are never miscounted — see _steal_corrected_sec).
-  2. TWO-SIZE MARGINAL — each sample pair runs SMALL then BIG turns
-     back-to-back in one JVM; the per-turn slope between them subtracts
-     the per-job fixed driver cost exactly (see SCALING_TURNS comment).
-
-Because residual noise (DRAM/cache contention) still only *lowers*
-throughput, capacity per leg/size is min-over-samples of corrected time,
-and the legs are INTERLEAVED (N, 4N, 4N, N, 4N, 4N, ...) over up to
-SPARK_GRAFT_SCALING_ROUNDS rounds so both legs get quiet-window shots.
-The 4N leg is visited SPARK_GRAFT_LEG_VISITS_4N (default 2) times per
-round, runs SPARK_GRAFT_LEG_BIGS_4N (default 2) BIG measurements per
-visit (its BIG time is the binding min), and its timed visits are
-ERA-GATED: when the bracketing bandwidth OR CPU probe shows the chosen
-set in a suppressed era (< SPARK_GRAFT_ERA_GATE x the best 4N probe),
-the visit is skipped and its budget reallocated to later rounds.
-Additionally each visit is bound to the QUIETEST of the disjoint
-candidate vCPU sets of its width, chosen by a short CPU/LLC-bound probe
-(spatial quiet-window exposure — see the CPU_PROBE_SECS comment block;
-all candidate probes and the chosen set are recorded per visit). With a
-min-over-samples estimator the binding constraint is quiet-window
-EXPOSURE, and it binds asymmetrically — the wider CPU set overlaps
-more host co-tenants, so suppressed eras hit the 4N leg far harder
-(r4 evidence: N-leg capacity stable within ~20% across 11 runs while
-the 4N leg swung 2.3x), while the N leg's min converges in 2-3 rounds
-(after which it is visited every other round). Each leg visit runs in
-its own JVM minutes apart, so the visits sample distinct multi-minute
-noise eras. Note an era *filter* (discard already-taken samples whose
-bracketing probe shows LLC suppression) was considered and rejected:
-it cannot move a min-over-samples estimator — suppressed-era samples
-are strictly slower and never own the min. The era GATE is different:
-it reallocates *future* budget before spending it, which is the same
-honest lever as more exposure; every gated skip is recorded in the
-detail file (gated_visits_4n) and the bracketing probes are recorded
-per sample (era_bw) so suppression stays auditable.
-Round 5 moved the default pair from (2, 8) to (1, 4) cores: the r4/r5
-evidence localized every miss to the 8-core leg's LLC co-tenancy — an
-infrastructure confound a real multi-executor cluster (per-node LLC)
-does not have — while a 4-core big leg fits inside ONE quiet 8-core
-host region and can be spatially dodged like the small leg. The DRAM
-bus scales ~3.9x from 1 → 4 cores (probe-measured), so bandwidth is
-not a confounded ceiling at this width either, and the job itself
-still exercises real shuffle parallelism (16 shuffle partitions + a
-12-partition AQE coalescing floor on the 4-core leg; the 32-core
-er/er_stress legs elsewhere in this file evidence the wide plan). Validation probe under deliberate co-tenancy (the repo's own
-20-min pytest suite running concurrently): raw 0.949 / corrected 0.925
-/ marginal 1.016 / stationary 1.319 unclamped — every estimator above
-target in a hostile era (docs/scaling_r5_probe_base1.json).
-At least SPARK_GRAFT_SCALING_MIN_ROUNDS rounds always run, and once the
-target is evidenced one extra confirmation round still runs, so the stop
-rule cannot select its own stopping round; unclamped ratios are reported
-alongside the clamped headline numbers. Bandwidth probes run
-best-of-SPARK_GRAFT_BW_REPEATS per call. N defaults to 1 (→ 4N = 4),
-overridable via SPARK_GRAFT_SCALING_BASE; SPARK_GRAFT_SKIP_SCALING=1
-skips the block; SPARK_GRAFT_SCALING_BUDGET caps the block's wall clock.
+The scaling block runs the identical ER job at N and 4N cores (N =
+SPARK_GRAFT_SCALING_BASE, default 1). Each leg visit is a subprocess bound
+with ``taskset -c 0..cores-1`` — a bare ``local[N]`` JVM on a wide host is
+not an N-core measurement (GC, netty and Arrow threads run unconstrained).
+A visit runs a warm-up, then one SMALL and one BIG job in the same JVM,
+each with the hypervisor-steal fraction of its window read from
+/proc/stat. Visits interleave N, 4N over rounds until SCALING_ROUNDS or
+SPARK_GRAFT_SCALING_BUDGET seconds run out (at least SCALING_MIN_ROUNDS).
+Per leg, the marginal throughput is (BIG − SMALL) / (t_big − t_small) over
+the min steal-corrected times, which subtracts the per-job fixed driver
+cost; ``efficiency = min(m_4N / m_N / 4, 1)``, or null when a leg's
+big−small gap collapses below 10% of its big time. One DRAM bandwidth
+probe per leg width is recorded beside it. A 4N leg wider than
+``os.cpu_count()`` is never started: the block records a ``skipped``
+reason. SPARK_GRAFT_SKIP_SCALING=1 skips the block.
 """
 
 from __future__ import annotations
@@ -112,101 +55,25 @@ CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 ER_TURNS = int(os.environ.get("SPARK_GRAFT_BENCH_TURNS", 1_000_000))
 # The 32-core er leg reports min-over-ER_SAMPLES executions: the first
 # run doubles as the ER pipeline's codegen/broadcast warmup (the suite
-# queries exercise different plans), and min-over-samples is the same
-# capacity estimator the scaling legs use — era noise only lowers
+# queries exercise different plans), and host noise only lowers
 # throughput (r5 evidence: 16.9 s vs 31.5 s for identical code in
 # different eras), so a single sample measures the era, not the plan.
 ER_SAMPLES = max(1, int(os.environ.get("SPARK_GRAFT_ER_SAMPLES", 2)))
-# Each timed sample runs the job at TWO sizes back-to-back (SMALL then
-# BIG in the same JVM, adjacent noise windows): the per-leg capacity is
-# the MARGINAL throughput (BIG-SMALL) / (t_big - t_small), which
-# subtracts the ~8-15 s of per-job serial driver coordination exactly.
-# At the 10^12-turn target that fixed cost amortizes to nothing, so the
-# marginal (per-turn slope) is the quantity that predicts cluster-scale
-# throughput; a single-size quotient at sandbox sizes measures mostly
-# Amdahl fixed cost (a two-size probe showed job-level 2→8-core speedup
-# rising from ~1.9x at 1M turns to ~2.9x at 3M purely from fixed-cost
-# dilution). Single-size raw numbers are still reported alongside.
+# scaling legs: SMALL and BIG job sizes (the marginal is the per-turn
+# slope between them), the N-leg width, and the block's wall budget
 SCALING_TURNS = int(os.environ.get("SPARK_GRAFT_SCALING_TURNS", 4_000_000))
 SCALING_TURNS_SMALL = int(os.environ.get("SPARK_GRAFT_SCALING_TURNS_SMALL", 1_000_000))
 SCALING_BASE = int(os.environ.get("SPARK_GRAFT_SCALING_BASE", 1))
-# one (small, big) pair per leg visit, spread over MORE interleaved rounds:
-# for the same wall budget, 8 rounds x 1 pair samples 8 distinct noise
-# windows per leg where 4 rounds x 2 pairs sampled only 4 — a single noisy
-# window can no longer sink a leg's min (round-2 review finding)
-SCALING_ROUNDS = int(os.environ.get("SPARK_GRAFT_SCALING_ROUNDS", 12))
-SCALING_MIN_ROUNDS = int(os.environ.get("SPARK_GRAFT_SCALING_MIN_ROUNDS", 3))
 SCALING_BUDGET = float(os.environ.get("SPARK_GRAFT_SCALING_BUDGET", 2700))
-LEG_SAMPLES = int(os.environ.get("SPARK_GRAFT_LEG_SAMPLES", 1))
-# 4N visits per round (module docstring: exposure, not filtering, is the
-# honest lever against asymmetric era suppression of the wide leg).
-# 3 as of round-5 run2 analysis: each visit carries its own cpuset
-# selection + era probe, and consecutive ~2-minute visits land in
-# adjacent host eras, so a third visit buys one more distinct era per
-# round — the r5-run2 miss (0.767) was one sub-29s big window short.
-LEG_VISITS_4N = int(os.environ.get("SPARK_GRAFT_LEG_VISITS_4N", 3))
-# extra BIG runs per 4N visit: with a min-over-samples estimator the 4N
-# leg's BIG time is the binding sample (its small converges fast), and a
-# second big run in the same JVM costs ~40% of a visit while doubling
-# that sample's quiet-window shots
-LEG_BIGS_4N = int(os.environ.get("SPARK_GRAFT_LEG_BIGS_4N", 2))
-# era gate for 4N visits: the bandwidth + CPU probes already bracket
-# every visit; when they show the CPU set in a suppressed era (probe
-# below ERA_GATE x the best 4N probe seen), the ~2-minute timed visit is
-# SKIPPED and its budget reallocated to later (potentially quiet)
-# rounds.  This is budget reallocation, NOT sample exclusion: a
-# suppressed-era sample is strictly slower and can never own a leg's
-# min, so skipping it cannot bias the estimator — it only buys more
-# quiet-window exposure per wall-clock (the r4 evidence located every
-# efficiency miss in suppressed 4N eras).  Gating activates only once
-# the 4N leg already holds >=1 (small,big) pair and >=2 probes; after a
-# skip one ERA_GATE_SLEEP + reprobe gives the era a chance to move.
-# The N leg is never gated: its narrow CPU set shows stable probes and
-# its min converges in 2-3 visits (gating it would only waste budget).
-# 0.85 as of round-5 run2 analysis: that run's two slowest 4N visits ran
-# at cpu probes 0.79-0.81x the best (the 0.8 gate let them through) and
-# their bigs came back 60s+, while every visit at >=0.85x produced bigs
-# in the quiet band — the gate threshold sits between the two observed
-# era populations.  Gated skips remain budget reallocation (recorded,
-# capped at 2 consecutive), never sample exclusion.
-ERA_GATE = float(os.environ.get("SPARK_GRAFT_ERA_GATE", 0.85))
-ERA_GATE_SLEEP = float(os.environ.get("SPARK_GRAFT_ERA_GATE_SLEEP", 20))
-# SPATIAL quiet-window exposure (round-5): host co-tenancy on this box is
-# spatially localized, not just temporal — simultaneous CPU/LLC-bound
-# probes on the four disjoint 8-core vCPU sets measure up to 1.5x apart
-# (e.g. 450 ops/s on cpus 0-7 vs 664 on 16-23 in the same minute) while
-# the DRAM bandwidth probe is FLAT across sets.  That is exactly the r4
-# suppression signature (4N marginal collapse with zero steal and flat
-# STREAM): the co-tenant pressure is LLC/port-level and lands on specific
-# vCPUs.  So each leg visit now (a) probes every disjoint candidate set
-# of its width with a short CPU-bound kernel and binds the visit to the
-# QUIETEST set — the same min-over-samples logic as temporal
-# interleaving, applied across space (contention only lowers throughput;
-# a real cluster's executors do not share cores with co-tenants at all),
-# and (b) feeds the chosen set's CPU probe into the 4N era gate, which
-# was previously blind to LLC suppression (it only saw DRAM bandwidth).
-# Every candidate probe and the chosen set are recorded per visit in the
-# detail file so the selection stays auditable.
-# 2.0 as of round-5 run2 analysis: at 1.2 s the probe's era estimate was
-# only weakly predictive of the following ~2-minute visit (a 916-ops
-# probe preceded 52/57 s bigs); a longer window averages over sub-second
-# co-tenant bursts at ~3 s/visit of extra cost
-CPU_PROBE_SECS = float(os.environ.get("SPARK_GRAFT_CPU_PROBE_SECS", 2.0))
-# N-leg convergence: once its BIG min stops improving (>2% over the
-# last 2 visits) the N leg is visited every other round, reallocating
-# the saved wall to 4N exposure (min-over-samples: skipped visits can
-# never worsen a recorded min)
-N_CONVERGED_VISITS = int(os.environ.get("SPARK_GRAFT_N_CONVERGED_VISITS", 3))
-BW_REPEATS = int(os.environ.get("SPARK_GRAFT_BW_REPEATS", 3))
-SCALING_TARGET_EFF = float(os.environ.get("SPARK_GRAFT_SCALING_TARGET", 0.8))
+SCALING_ROUNDS = 12
+SCALING_MIN_ROUNDS = 3
+BW_REPEATS = 3
 SKIP_SCALING = os.environ.get("SPARK_GRAFT_SKIP_SCALING", "") == "1"
 # ER scale-stress: one run big enough that the block caps and skew handling
 # actually engage (sf0.1-scale runs never fill a 1000-vertex block); cap
 # hit-rates are written to lineage and summarized in the output block
 ER_STRESS_TURNS = int(os.environ.get("SPARK_GRAFT_ER_STRESS_TURNS", 10_000_000))
 SKIP_ER_STRESS = os.environ.get("SPARK_GRAFT_SKIP_ER_STRESS", "") == "1"
-# the driver tail-captures a bounded number of bytes: the printed line
-# carries only headline numbers; bulky per-sample arrays go to a sidecar
 # smoke runs (scaling skipped) write a separate sidecar so they can never
 # clobber the last full-protocol scaling snapshot
 DETAIL_PATH = os.environ.get(
@@ -220,13 +87,8 @@ DETAIL_PATH = os.environ.get(
 SCALING_COMPACT_KEYS = (
     "cores_n", "cores_4n", "rounds",
     "turns_per_sec_n", "turns_per_sec_4n",
-    "marginal_tput_n", "marginal_tput_4n",
-    "speedup_raw", "efficiency_raw", "efficiency_corrected",
-    "speedup_marginal", "efficiency_marginal",
-    "efficiency_stationary", "n_visits_stationary_n",
-    "n_visits_stationary_4n", "efficiency",
-    "mem_bw_gbps_n", "mem_bw_gbps_4n", "mem_bw_speedup",
-    "efficiency_vs_bandwidth_raw", "efficiency_vs_bandwidth",
+    "marginal_tput_n", "marginal_tput_4n", "efficiency",
+    "mem_bw_gbps_n", "mem_bw_gbps_4n", "skipped",
 )
 
 BENCH_QUERIES = [
@@ -282,8 +144,8 @@ def _session(cores: int) -> SparkSession:
         # CPU-bound Arrow-UDF stages keep load-balance granularity (8-core
         # measurement: 10 coalesced partitions ran 2.3x slower than 24);
         # wide sessions keep 2x slots with byte-targeted coalescing, which
-        # the interleaved A/B (scripts/ab_shuffle_floor.py) showed beats
-        # the floored config at 32 cores (doc_embeddings 2.0 s vs 4.7 s,
+        # an interleaved A/B (docs/ROUND5_NOTES.md, "Shuffle-knob A/B")
+        # showed beats the floored config at 32 cores (doc_embeddings 2.0 s vs 4.7 s,
         # er 1M 12.4 s vs 15.2 s)
         .config(
             "spark.sql.shuffle.partitions",
@@ -357,12 +219,8 @@ def _cpu_ticks(cpus: frozenset[int]) -> tuple[int, int, int]:
 
 
 def _timed_er(spark, cpus: frozenset[int], n_turns: int) -> dict:
-    """One timed job with the steal AND busy fractions of its own window
-    measured on the leg's taskset CPU set. ``busy`` makes the shared-bus
-    decomposition auditable from the recorded samples alone: speedup loss
-    = idle share (busy_4N/busy_N) × cpu-time inflation
-    ((t_4N·4N·busy_4N)/(t_N·N·busy_N)) — the second factor is memory-stall
-    inflation a per-node-DRAM cluster does not have."""
+    """One timed job with the steal and busy fractions of its own window
+    measured on the leg's taskset CPU set."""
     b0, i0, s0 = _cpu_ticks(cpus)
     sec, _n = _run_er_job(spark, n_turns)
     b1, i1, s1 = _cpu_ticks(cpus)
@@ -378,33 +236,20 @@ def _timed_er(spark, cpus: frozenset[int], n_turns: int) -> dict:
 
 
 def _leg_main(cores: int) -> None:
-    """Subprocess entry: one taskset-bound scaling leg → one JSON line
-    with LEG_SAMPLES (small, big) sample pairs, each with its window's
-    measured steal fraction.
+    """Subprocess entry: one taskset-bound leg visit → one JSON line with
+    a SMALL and a BIG sample, run back-to-back in the same JVM.
 
-    A tiny warmup run precedes the timed runs: the first pipeline
-    execution pays ~25-30 s of size-independent JVM work (whole-stage
-    codegen compilation, Python worker spawn, parquet/committer init)
-    that a long-lived cluster pays once at startup, not per job — timing
-    it would measure JIT latency, not data scaling. Small and big runs
-    of a pair are back-to-back in the same JVM so the marginal
-    throughput derived from them compares adjacent noise windows."""
-    n_bigs = int(os.environ.get("SPARK_GRAFT_LEG_N_BIGS", "1"))
+    A 5k-turn warm-up precedes them: the first pipeline execution pays
+    ~25-30 s of size-independent JVM work (whole-stage codegen, Python
+    worker spawn, committer init) that a long-lived cluster pays once at
+    startup, not per job."""
     cpus = _affinity_cpus()
     spark = _session(cores)
     try:
         _run_er_job(spark, 5_000)
-        samples = []
-        for _ in range(LEG_SAMPLES):
-            # SANDWICH order (round-5): small, big×n, small — the bigs
-            # are BRACKETED by two small runs so the per-visit pairing
-            # in _leg_capacity can test era stationarity (two smalls
-            # agreeing ⇒ the era held across the visit) instead of
-            # pairing a small and a big from different host eras.
-            samples.append(_timed_er(spark, cpus, SCALING_TURNS_SMALL))
-            for _b in range(n_bigs):
-                samples.append(_timed_er(spark, cpus, SCALING_TURNS))
-            samples.append(_timed_er(spark, cpus, SCALING_TURNS_SMALL))
+        samples = [
+            _timed_er(spark, cpus, n) for n in (SCALING_TURNS_SMALL, SCALING_TURNS)
+        ]
     finally:
         spark.stop()
     print(json.dumps({"samples": samples}))
@@ -412,9 +257,7 @@ def _leg_main(cores: int) -> None:
 
 def _bw_main(workers: int) -> None:
     """Subprocess entry: STREAM-like aggregate memory-bandwidth probe —
-    best of BW_REPEATS back-to-back runs (noise only lowers bandwidth,
-    and the probe is ~100x cheaper than a pipeline leg, so extra repeats
-    are the cheapest way to find the quiet-window ceiling)."""
+    best of BW_REPEATS back-to-back runs (noise only lowers bandwidth)."""
     import multiprocessing as mp
 
     best = 0.0
@@ -437,498 +280,103 @@ def _bw_stream(n_mb: int) -> float:
     return 20 * 2 * a.nbytes / (time.perf_counter() - t0)
 
 
-def _cpu_probe_main(workers: int) -> None:
-    """Subprocess entry: CPU/LLC-bound era probe — ``workers`` parallel
-    small-matrix matmul loops (working set ~3.5 MB/worker: L2/LLC
-    resident, so co-tenant cache/port pressure on the bound vCPU set
-    shows up; a DRAM-bound probe does not see it). Prints aggregate
-    matmuls/sec."""
-    import multiprocessing as mp
-
-    with mp.Pool(workers) as p:
-        ops = sum(p.map(_cpu_probe_worker, [CPU_PROBE_SECS] * workers))
-    print(json.dumps({"ops": round(ops, 1)}))
-
-
-def _cpu_probe_worker(secs: float) -> float:
-    import numpy as np
-
-    rng = np.random.RandomState(0)
-    a = rng.rand(384, 384)
-    b = rng.rand(384, 384)
-    t0 = time.perf_counter()
-    n = 0
-    while time.perf_counter() - t0 < secs:
-        a @ b
-        n += 1
-    return n / (time.perf_counter() - t0)
-
-
-def _taskset_cmd(cpuset: str) -> list[str]:
+def _run_bound(mode: str, cores: int) -> dict:
+    """Run ``bench.py <mode> <cores>`` bound to vCPUs 0..cores-1 and
+    return the JSON object on its last stdout line."""
     import shutil
+    import subprocess
 
-    cmd = [sys.executable, os.path.abspath(__file__)]
+    cmd = [sys.executable, os.path.abspath(__file__), mode, str(cores)]
     if shutil.which("taskset"):
-        cmd = ["taskset", "-c", cpuset] + cmd
-    return cmd
-
-
-def _candidate_cpusets(cores: int) -> list[str]:
-    """Disjoint candidate vCPU sets of the leg's width, spread across the
-    host's 32 vCPUs (at most 4 candidates — probing more buys little and
-    costs probe time). Falls back to the classic 0..cores-1 set when the
-    box is too small to offer alternatives."""
-    total = os.cpu_count() or cores
-    if total < 2 * cores:
-        return [f"0-{cores - 1}"]
-    stride = max(total // 4, cores)
-    sets = []
-    start = 0
-    while start + cores <= total and len(sets) < 4:
-        sets.append(f"{start}-{start + cores - 1}")
-        start += stride
-    return sets
-
-
-def _cpu_probe_subprocess(cpuset: str, workers: int) -> float:
-    import subprocess
-
-    env = dict(os.environ, SPARK_GRAFT_CPU_PROBE_WORKERS=str(workers))
-    env.pop("SPARK_GRAFT_LEG_CORES", None)
-    env.pop("SPARK_GRAFT_BW_CORES", None)
-    out = subprocess.run(
-        _taskset_cmd(cpuset), env=env, capture_output=True, text=True, check=True
-    ).stdout.strip().splitlines()
-    return json.loads(out[-1])["ops"]
-
-
-def _pick_cpuset(cores: int) -> tuple[str, float, dict[str, float]]:
-    """Probe every candidate set and return (quietest set, its probe
-    value, all probe values) — spatial quiet-window exposure (see the
-    CPU_PROBE_SECS comment block). All probes are recorded per visit."""
-    probes = {s: _cpu_probe_subprocess(s, cores) for s in _candidate_cpusets(cores)}
-    best = max(probes, key=probes.get)
-    return best, probes[best], probes
-
-
-def _bw_subprocess(cores: int, cpuset: str | None = None) -> float:
-    """Aggregate copy bandwidth (GB/s) with the process bound to the
-    leg's vCPU set — the infrastructure control for the scaling
-    measurement: a data-streaming workload cannot scale past the DRAM
-    bus, and on this single box the bus itself scales well under 4x from
-    N to 4N cores."""
-    import subprocess
-
-    env = dict(os.environ, SPARK_GRAFT_BW_CORES=str(cores))
-    env.pop("SPARK_GRAFT_LEG_CORES", None)
-    out = subprocess.run(
-        _taskset_cmd(cpuset or f"0-{cores - 1}"),
-        env=env, capture_output=True, text=True, check=True,
-    ).stdout.strip().splitlines()
-    return json.loads(out[-1])["gbps"]
-
-
-def _run_leg_subprocess(cores: int, cpuset: str, n_bigs: int = 1) -> list[dict]:
-    """Run one leg bound to the given vCPU set; returns the leg's raw
-    sample dicts ({turns, sec, steal})."""
-    import subprocess
-
-    env = dict(
-        os.environ,
-        SPARK_GRAFT_LEG_CORES=str(cores),
-        SPARK_GRAFT_LEG_N_BIGS=str(n_bigs),
-    )
-    out = subprocess.run(
-        _taskset_cmd(cpuset), env=env, capture_output=True, text=True, check=True
-    ).stdout.strip().splitlines()
-    return json.loads(out[-1])["samples"]
+        cmd = ["taskset", "-c", f"0-{cores - 1}"] + cmd
+    out = subprocess.run(cmd, capture_output=True, text=True, check=True).stdout
+    return json.loads(out.strip().splitlines()[-1])
 
 
 def _steal_corrected_sec(s: dict) -> float:
     """Quiet-window wall time implied by a sample: t_corr = t×(1−steal).
-
-    ``steal`` is the fraction of the window's CPU-capacity jiffies on the
-    leg's taskset CPU set that the hypervisor withheld while the vCPU was
-    runnable (/proc/stat field 8) — time a co-tenant ran, not this job.
-    Idle vCPUs accrue no steal, so genuinely serial phases (driver-only
-    work leaving worker CPUs idle) dilute rather than inflate the
-    correction: the correction can only *under*-correct Amdahl effects,
-    never hide them. Co-tenant DRAM/cache contention is NOT corrected, so
-    corrected samples remain lower bounds on quiet-window capacity and
-    min-over-samples stays the right estimator."""
+    Idle vCPUs accrue no steal, so serial phases dilute rather than
+    inflate the correction; co-tenant DRAM/cache contention is not
+    corrected, so corrected samples stay lower bounds on capacity."""
     return s["sec"] * (1.0 - min(s["steal"], 0.95))
 
 
-# era-stationarity band for the per-visit (paired) marginal: a visit's
-# two bracketing small runs must agree within this fraction for the
-# visit's era to count as stationary (see _leg_capacity)
-VISIT_STATIONARY_BAND = float(os.environ.get("SPARK_GRAFT_VISIT_BAND", 0.2))
-
-
-def _leg_capacity(samples: list[dict]) -> dict:
-    """Per-leg capacity estimates from (small, big) sample pairs.
-
-    Two marginal estimators, both reported:
-
-    * cross-visit (``marginal_raw``/``marginal_corr``, the r2-r4 form):
-      ``delta / (min over ALL bigs − min over ALL smalls)``.  Mixing eras
-      across visits makes this conservative whenever no single visit is
-      fully quiet — the min small typically comes from the quietest era
-      seen while the min big comes from another, so the denominator is
-      inflated by the era difference.
-    * era-stationary per-visit (``marginal_visit_raw``/``_corr``, round
-      5): each visit runs small, big×k, small (sandwich, see _leg_main);
-      a visit is STATIONARY iff its two bracketing smalls agree within
-      VISIT_STATIONARY_BAND.  For a stationary visit the host-era factor
-      f ≥ 1 is constant across the pair, so the visit slope
-      ``delta / (min(bigs) − min(smalls)) = quiet_slope / f`` is a lower
-      bound on the quiet-era slope, and the max over stationary visits
-      is still a lower bound — the same min-over-samples capacity logic,
-      applied to PAIRED measurements from one era.  The failure mode of
-      unpaired per-visit slopes (era improves between the leading small
-      and the bigs → denominator collapses → slope inflates) is exactly
-      what the trailing small + stationarity test rejects: an era move
-      inside the visit shows up as disagreeing smalls and the visit is
-      excluded from owning the estimate (its samples still feed the
-      cross-visit and single-size estimators)."""
-    small = [s for s in samples if s["turns"] == SCALING_TURNS_SMALL]
-    big = [s for s in samples if s["turns"] == SCALING_TURNS]
-    t_small_raw = min(s["sec"] for s in small)
-    t_big_raw = min(s["sec"] for s in big)
-    t_small_corr = min(_steal_corrected_sec(s) for s in small)
-    t_big_corr = min(_steal_corrected_sec(s) for s in big)
-    delta = SCALING_TURNS - SCALING_TURNS_SMALL
-    out = {
-        "tput_raw": SCALING_TURNS / t_big_raw,
-        "tput_corr": SCALING_TURNS / t_big_corr,
-        "t_small_corr": t_small_corr,
-        "t_big_corr": t_big_corr,
-        "marginal_raw": None,
-        "marginal_corr": None,
-        "marginal_visit_raw": None,
-        "marginal_visit_corr": None,
-        "n_visits_stationary": 0,
-        "n_visits_paired": 0,
+def _leg_capacity(samples: list[dict], small: int, big: int) -> dict:
+    """Per-leg capacity from the leg's SMALL and BIG samples, min over
+    visits (host noise only lowers throughput): ``tput_raw`` = BIG turns
+    over the fastest raw BIG time, and ``marginal_corr`` = the per-turn
+    slope (big − small) / (t_big − t_small) over steal-corrected times,
+    which subtracts the per-job fixed cost. ``marginal_corr`` is None
+    when the gap is under 10% of t_big: the min small and min big came
+    from different host eras and the collapsed denominator would make
+    the slope explode."""
+    t_big_raw = min(s["sec"] for s in samples if s["turns"] == big)
+    t_small = min(_steal_corrected_sec(s) for s in samples if s["turns"] == small)
+    t_big = min(_steal_corrected_sec(s) for s in samples if s["turns"] == big)
+    gap = t_big - t_small
+    return {
+        "tput_raw": big / t_big_raw,
+        "marginal_corr": (big - small) / gap if gap > 0.1 * t_big else None,
     }
-    # marginal throughput = per-turn slope between the two sizes; only
-    # meaningful when the big run is clearly longer than the small one
-    # (guards against a cross-window artifact making the denominator
-    # collapse and the slope explode)
-    if t_big_raw - t_small_raw > 0.1 * t_big_raw:
-        out["marginal_raw"] = delta / (t_big_raw - t_small_raw)
-    if t_big_corr - t_small_corr > 0.1 * t_big_corr:
-        out["marginal_corr"] = delta / (t_big_corr - t_small_corr)
 
-    # era-stationary per-visit slopes (visits tagged by _measure_scaling;
-    # pre-sandwich samples without a visit id or with <2 smalls simply
-    # never qualify)
-    by_visit: dict[int, list[dict]] = {}
-    for s in samples:
-        if "visit" in s:
-            by_visit.setdefault(s["visit"], []).append(s)
-    for vs in by_visit.values():
-        vsmall = [s for s in vs if s["turns"] == SCALING_TURNS_SMALL]
-        vbig = [s for s in vs if s["turns"] == SCALING_TURNS]
-        if len(vsmall) < 2 or not vbig:
-            continue
-        out["n_visits_paired"] += 1
-        s_first, s_last = vsmall[0]["sec"], vsmall[-1]["sec"]
-        if abs(s_first - s_last) > VISIT_STATIONARY_BAND * min(s_first, s_last):
-            continue  # era moved inside the visit: pairing unreliable
-        out["n_visits_stationary"] += 1
-        for key, t in (
-            ("marginal_visit_raw", lambda s: s["sec"]),
-            ("marginal_visit_corr", _steal_corrected_sec),
-        ):
-            tb = min(t(s) for s in vbig)
-            ts = min(t(s) for s in vsmall)
-            if tb - ts > 0.1 * tb:
-                slope = delta / (tb - ts)
-                if out[key] is None or slope > out[key]:
-                    out[key] = slope
-    return out
+
+def _scaling_summary(
+    samples_n: list[dict], samples_4n: list[dict], small: int, big: int
+) -> dict:
+    """The scaling estimator: efficiency = min(m_4N / m_N / 4, 1) over the
+    legs' steal-corrected marginals; null when either marginal is."""
+    cap_n = _leg_capacity(samples_n, small, big)
+    cap_4n = _leg_capacity(samples_4n, small, big)
+    m_n, m_4n = cap_n["marginal_corr"], cap_4n["marginal_corr"]
+    ratio = m_4n / m_n / 4.0 if m_n and m_4n else None
+    return {
+        "turns_per_sec_n": round(cap_n["tput_raw"], 1),
+        "turns_per_sec_4n": round(cap_4n["tput_raw"], 1),
+        "marginal_tput_n": round(m_n, 1) if m_n else None,
+        "marginal_tput_4n": round(m_4n, 1) if m_4n else None,
+        "efficiency_unclamped": round(ratio, 3) if ratio else None,
+        "efficiency": round(min(ratio, 1.0), 3) if ratio else None,
+    }
 
 
 def _measure_scaling() -> dict:
-    """Interleaved legs (see module docstring): rounds of (N, 4N), each
-    leg a taskset-bound subprocess emitting (small, big) timed pairs with
-    per-window steal fractions.
-
-    Four efficiency estimators, least to most faithful to the
-    10^12-turn north target, all reported raw (unclamped) and clamped:
-
-      * efficiency_raw        — best big-size sample quotient. Includes
-        sandbox per-job fixed cost (Amdahl) and host noise.
-      * efficiency_corrected  — same quotient on steal-corrected samples
-        (hypervisor contention removed; Amdahl still included).
-      * efficiency_marginal   — quotient of per-turn marginal throughputs
-        (fixed per-job cost subtracted exactly; the slope is what
-        predicts throughput at sizes where fixed cost amortizes away),
-        cross-visit form: min small and min big may come from different
-        host eras, which understates the slope whenever no single visit
-        is fully quiet.
-      * efficiency_stationary — the same marginal computed from PAIRED
-        (one-visit, one-era) sandwich measurements that pass the
-        era-stationarity test (see _leg_capacity); the same estimator is
-        applied to both legs, never mixed per leg.  The headline
-        ``efficiency`` is the stationary quotient when both legs hold a
-        stationary visit, else the cross-visit steal-corrected marginal.
-
-    Anti-selection-bias guards (round-1 review findings): a fixed minimum
-    of SCALING_MIN_ROUNDS rounds always runs; once the target efficiency
-    is evidenced ONE extra confirmation round still runs (so the stop
-    rule cannot select its own stopping round); all ratios are reported
-    unclamped alongside the clamped headline numbers; bandwidth probes
-    bracket the legs (before each round + after the last); a wall-clock
-    budget (SPARK_GRAFT_SCALING_BUDGET) bounds the whole block."""
-    n_cores, n4_cores = SCALING_BASE, SCALING_BASE * 4
-    # infrastructure control: the DRAM bus this single box offers N vs 4N
-    # cores (a multi-executor cluster has per-node memory and does not see
-    # this ceiling).
-    bw_samples: dict[int, list[float]] = {n_cores: [], n4_cores: []}
-    cpu_probes: dict[int, list[float]] = {n_cores: [], n4_cores: []}
-    samples: dict[int, list[dict]] = {n_cores: [], n4_cores: []}
-    visit_ids: dict[int, int] = {n_cores: 0, n4_cores: 0}
-
-    t_start = time.monotonic()
-    rounds_run = 0
-    confirm_rounds_left = None  # becomes 1 when the target is first hit
-    gated_visits: list[dict] = []  # auditable record of era-gated skips
-    consec_gated = 0  # consecutive-gate cap state (see the gate branch)
-    # N-leg (small_min, big_min) after each visit: the marginal slope
-    # needs BOTH mins converged — an unconverged SMALL min inflates the
-    # N marginal (smaller big-small gap) and suppresses efficiency, an
-    # unconverged BIG min deflates it
-    n_min_history: list[tuple[float, float]] = []
-
-    def _n_converged() -> bool:
-        """N-leg mins stopped improving: >=N_CONVERGED_VISITS visits and
-        <2% improvement of EITHER size's min over the last two visits
-        (min-over-samples: further visits are unlikely to move them;
-        budget buys more at 4N)."""
-        h = n_min_history
-        if len(h) < max(N_CONVERGED_VISITS, 3):
-            return False
-        return h[-1][0] >= 0.98 * h[-3][0] and h[-1][1] >= 0.98 * h[-3][1]
-
-    for _round_idx in range(SCALING_ROUNDS):
-        if rounds_run >= SCALING_MIN_ROUNDS and (
-            time.monotonic() - t_start > SCALING_BUDGET
-        ):
-            break
-        rounds_run += 1
-        visit_n = not (_n_converged() and _round_idx % 2 == 1)
-        visit_plan = ((n_cores,) if visit_n else ()) + (n4_cores,) * max(
-            LEG_VISITS_4N, 1
-        )
-        for cores in visit_plan:
-            # spatial exposure: probe every disjoint candidate vCPU set of
-            # this width, bind the visit to the quietest (see the
-            # CPU_PROBE_SECS comment block); all probes recorded below
-            cpuset, ops, probes = _pick_cpuset(cores)
-            cpu_probes[cores].append(ops)
-            bw = _bw_subprocess(cores, cpuset)
-            bw_samples[cores].append(bw)
-            # consecutive-gate cap: after 2 gated 4N visits in a row the
-            # next visit runs REGARDLESS — bounds the budget a long
-            # suppressed era can burn in probe-sleep-reprobe loops and
-            # guarantees the leg keeps collecting samples (a forced
-            # suppressed-era sample is strictly slower and can never own
-            # the leg's min, so forcing it cannot bias the estimator)
-            if cores == n4_cores and consec_gated < 2 and len(
-                bw_samples[cores]
-            ) >= 2 and any(
-                s["turns"] == SCALING_TURNS for s in samples[cores]
-            ):
-                # era gate (see ERA_GATE comment): skip the timed visit in
-                # a suppressed era; one sleep + reprobe lets the era move.
-                # Gates on BOTH probes: DRAM bandwidth (bus suppression)
-                # and the CPU kernel (LLC/port suppression — the r4 miss
-                # mode that shows flat STREAM and zero steal).
-                best_bw = max(bw_samples[cores])
-                best_ops = max(cpu_probes[cores])
-                if bw < ERA_GATE * best_bw or ops < ERA_GATE * best_ops:
-                    gated_visits.append(
-                        {
-                            "bw": round(bw, 1), "best_bw": round(best_bw, 1),
-                            "cpu": round(ops, 1), "best_cpu": round(best_ops, 1),
-                            "cpuset": cpuset,
-                        }
-                    )
-                    time.sleep(ERA_GATE_SLEEP)
-                    cpuset, ops, probes = _pick_cpuset(cores)
-                    cpu_probes[cores].append(ops)
-                    bw = _bw_subprocess(cores, cpuset)
-                    bw_samples[cores].append(bw)
-                    if bw < ERA_GATE * max(bw_samples[cores]) or ops < ERA_GATE * max(
-                        cpu_probes[cores]
-                    ):
-                        gated_visits.append(
-                            {
-                                "bw": round(bw, 1),
-                                "best_bw": round(max(bw_samples[cores]), 1),
-                                "cpu": round(ops, 1),
-                                "best_cpu": round(max(cpu_probes[cores]), 1),
-                                "cpuset": cpuset,
-                            }
-                        )
-                        consec_gated += 1
-                        continue
-            if cores == n4_cores:
-                consec_gated = 0
-            visit = _run_leg_subprocess(
-                cores, cpuset, n_bigs=LEG_BIGS_4N if cores == n4_cores else 1
-            )
-            visit_ids[cores] += 1
-            for i, s in enumerate(visit):
-                # era evidence: what the box offered this visit's chosen
-                # CPU set right before the timed pair (suppressed eras are
-                # auditable per sample; never used to exclude samples)
-                s["era_bw"] = round(bw, 1)
-                s["era_cpu"] = round(ops, 1)
-                s["cpuset"] = cpuset
-                s["visit"] = visit_ids[cores]
-                if i == 0:
-                    s["cpu_probes"] = {k: round(v, 1) for k, v in probes.items()}
-            samples[cores].extend(visit)
-            if cores == n_cores:
-                n_min_history.append(
-                    (
-                        min(
-                            s["sec"]
-                            for s in samples[cores]
-                            if s["turns"] == SCALING_TURNS_SMALL
-                        ),
-                        min(
-                            s["sec"]
-                            for s in samples[cores]
-                            if s["turns"] == SCALING_TURNS
-                        ),
-                    )
-                )
-        if confirm_rounds_left is not None:
-            confirm_rounds_left -= 1
-            if confirm_rounds_left <= 0:
-                break
-            continue
-        if rounds_run < SCALING_MIN_ROUNDS:
-            continue
-        cap_n = _leg_capacity(samples[n_cores])
-        cap_4n = _leg_capacity(samples[n4_cores])
-        bw_ratio = max(bw_samples[n4_cores]) / max(bw_samples[n_cores])
-        evidenced = cap_4n["tput_raw"] / cap_n["tput_raw"] / 4.0 >= SCALING_TARGET_EFF
-        if cap_n["marginal_corr"] and cap_4n["marginal_corr"]:
-            evidenced = evidenced or (
-                cap_4n["marginal_corr"] / cap_n["marginal_corr"] / 4.0
-                >= SCALING_TARGET_EFF
-            )
-        if cap_n["marginal_visit_corr"] and cap_4n["marginal_visit_corr"]:
-            evidenced = evidenced or (
-                cap_4n["marginal_visit_corr"] / cap_n["marginal_visit_corr"] / 4.0
-                >= SCALING_TARGET_EFF
-            )
-        if bw_ratio > 1.0:
-            evidenced = evidenced or (
-                cap_4n["tput_raw"] / cap_n["tput_raw"] / bw_ratio
-                >= SCALING_TARGET_EFF
-            )
-        if evidenced:
-            # schedule ONE more confirmation round and then stop (its
-            # samples are included in the reported stats either way)
-            confirm_rounds_left = 1
-    # final bracket: one more bandwidth probe per side AFTER the legs
-    for cores in (n_cores, n4_cores):
-        cpuset, ops, _probes = _pick_cpuset(cores)
-        cpu_probes[cores].append(ops)
-        bw_samples[cores].append(_bw_subprocess(cores, cpuset))
-    bw_n = max(bw_samples[n_cores])
-    bw_4n = max(bw_samples[n4_cores])
-    bw_speedup_raw = bw_4n / bw_n
-    # 4N cores cannot have LESS aggregate bandwidth than N; a ratio below 1
-    # just means the 4N probe never saw a quiet window — clamped value is
-    # the headline, raw value is reported beside it
-    bw_speedup = max(bw_speedup_raw, 1.0)
-
-    cap_n = _leg_capacity(samples[n_cores])
-    cap_4n = _leg_capacity(samples[n4_cores])
-    speedup_raw = cap_4n["tput_raw"] / cap_n["tput_raw"]
-    speedup_corr = cap_4n["tput_corr"] / cap_n["tput_corr"]
-    marginal_ok = bool(cap_n["marginal_corr"] and cap_4n["marginal_corr"])
-    speedup_marginal = (
-        cap_4n["marginal_corr"] / cap_n["marginal_corr"] if marginal_ok else None
-    )
-    # era-stationary paired quotient: the same estimator on BOTH legs
-    # (never mixed per-leg), used as the headline when both legs hold at
-    # least one stationary visit — it pairs sizes measured in one era,
-    # which is what a quiet-cluster measurement would do; the cross-visit
-    # quotient stays reported beside it (see _leg_capacity docstring)
-    stationary_ok = bool(
-        cap_n["marginal_visit_corr"] and cap_4n["marginal_visit_corr"]
-    )
-    speedup_stationary = (
-        cap_4n["marginal_visit_corr"] / cap_n["marginal_visit_corr"]
-        if stationary_ok
-        else None
-    )
-    if stationary_ok:
-        headline = speedup_stationary
-    elif marginal_ok:
-        headline = speedup_marginal
-    else:
-        headline = speedup_corr
-
-    def _r(x, nd=3):
-        return round(x, nd) if x is not None else None
-
-    return {
+    """Interleaved N, 4N leg visits (see the module docstring) → the
+    scaling record: samples, the estimator's output, and one DRAM
+    bandwidth probe per leg width."""
+    n_cores, n4_cores = SCALING_BASE, 4 * SCALING_BASE
+    record = {
         "cores_n": n_cores,
         "cores_4n": n4_cores,
         "n_turns": SCALING_TURNS,
         "n_turns_small": SCALING_TURNS_SMALL,
-        "rounds": rounds_run,
-        "n_gated_visits_4n": len(gated_visits),
-        "gated_visits_4n": gated_visits,
+    }
+    avail = os.cpu_count() or 1
+    if n4_cores > avail:
+        return {
+            **record,
+            "efficiency": None,
+            "skipped": f"4N leg needs {n4_cores} cores, os.cpu_count() is {avail}",
+        }
+    bw = {cores: _run_bound("bw", cores)["gbps"] for cores in (n_cores, n4_cores)}
+    samples: dict[int, list[dict]] = {n_cores: [], n4_cores: []}
+    t_start = time.monotonic()
+    rounds = 0
+    while rounds < SCALING_ROUNDS and (
+        rounds < SCALING_MIN_ROUNDS or time.monotonic() - t_start <= SCALING_BUDGET
+    ):
+        rounds += 1
+        for cores in (n_cores, n4_cores):
+            samples[cores].extend(_run_bound("leg", cores)["samples"])
+    return {
+        **record,
+        "rounds": rounds,
         "samples_n": samples[n_cores],
         "samples_4n": samples[n4_cores],
-        "bw_samples_n": [round(x, 1) for x in bw_samples[n_cores]],
-        "bw_samples_4n": [round(x, 1) for x in bw_samples[n4_cores]],
-        "cpu_probes_n": [round(x, 1) for x in cpu_probes[n_cores]],
-        "cpu_probes_4n": [round(x, 1) for x in cpu_probes[n4_cores]],
-        "turns_per_sec_n": _r(cap_n["tput_raw"], 1),
-        "turns_per_sec_4n": _r(cap_4n["tput_raw"], 1),
-        "turns_per_sec_n_corrected": _r(cap_n["tput_corr"], 1),
-        "turns_per_sec_4n_corrected": _r(cap_4n["tput_corr"], 1),
-        "marginal_tput_n": _r(cap_n["marginal_corr"], 1),
-        "marginal_tput_4n": _r(cap_4n["marginal_corr"], 1),
-        "marginal_tput_n_raw": _r(cap_n["marginal_raw"], 1),
-        "marginal_tput_4n_raw": _r(cap_4n["marginal_raw"], 1),
-        "marginal_visit_tput_n": _r(cap_n["marginal_visit_corr"], 1),
-        "marginal_visit_tput_4n": _r(cap_4n["marginal_visit_corr"], 1),
-        "marginal_visit_tput_n_raw": _r(cap_n["marginal_visit_raw"], 1),
-        "marginal_visit_tput_4n_raw": _r(cap_4n["marginal_visit_raw"], 1),
-        "n_visits_stationary_n": cap_n["n_visits_stationary"],
-        "n_visits_stationary_4n": cap_4n["n_visits_stationary"],
-        "n_visits_paired_n": cap_n["n_visits_paired"],
-        "n_visits_paired_4n": cap_4n["n_visits_paired"],
-        "speedup_stationary": _r(speedup_stationary),
-        "efficiency_stationary": _r(
-            speedup_stationary / 4.0 if stationary_ok else None
+        **_scaling_summary(
+            samples[n_cores], samples[n4_cores], SCALING_TURNS_SMALL, SCALING_TURNS
         ),
-        "speedup_raw": _r(speedup_raw),
-        "efficiency_raw": _r(speedup_raw / 4.0),
-        "speedup_corrected": _r(speedup_corr),
-        "efficiency_corrected": _r(speedup_corr / 4.0),
-        "speedup_marginal": _r(speedup_marginal),
-        "efficiency_marginal": _r(
-            speedup_marginal / 4.0 if marginal_ok else None
-        ),
-        "efficiency": _r(min(headline / 4.0, 1.0)),
-        "mem_bw_gbps_n": round(bw_n, 1),
-        "mem_bw_gbps_4n": round(bw_4n, 1),
-        "mem_bw_speedup_raw": round(bw_speedup_raw, 2),
-        "mem_bw_speedup": round(bw_speedup, 2),
-        "efficiency_vs_bandwidth_raw": _r(speedup_raw / bw_speedup),
-        "efficiency_vs_bandwidth": _r(min(speedup_raw / bw_speedup, 1.0)),
+        "mem_bw_gbps_n": round(bw[n_cores], 1),
+        "mem_bw_gbps_4n": round(bw[n4_cores], 1),
     }
 
 
@@ -1068,14 +516,9 @@ def main() -> None:
 
 
 if __name__ == "__main__":
-    leg = os.environ.get("SPARK_GRAFT_LEG_CORES")
-    bw = os.environ.get("SPARK_GRAFT_BW_CORES")
-    cpu = os.environ.get("SPARK_GRAFT_CPU_PROBE_WORKERS")
-    if leg:
-        _leg_main(int(leg))
-    elif bw:
-        _bw_main(int(bw))
-    elif cpu:
-        _cpu_probe_main(int(cpu))
+    # ``bench.py leg <cores>`` / ``bench.py bw <cores>``: the taskset-bound
+    # subprocess entries of the scaling block (see _run_bound)
+    if len(sys.argv) == 3 and sys.argv[1] in ("leg", "bw"):
+        (_leg_main if sys.argv[1] == "leg" else _bw_main)(int(sys.argv[2]))
     else:
         main()

@@ -70,7 +70,8 @@ def get_spark(
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
         master = f"local[{cpus}]"
     cores = _local_cores(master)
-    # Width-conditional shuffle sizing (A/B-measured, scripts/ab_shuffle_floor.py):
+    # Width-conditional shuffle sizing (A/B-measured, docs/ROUND5_NOTES.md,
+    # "Shuffle-knob A/B"):
     # narrow sessions (<= 8 task slots — the scaling legs and small clusters)
     # need extra partition granularity so AQE coalescing can't leave the
     # CPU-bound Arrow-UDF stages with ragged waves (4M-turn extraction at 8

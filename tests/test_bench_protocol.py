@@ -1,88 +1,78 @@
-"""Pins for the scaling-protocol helpers in bench.py (no Spark needed).
+"""Pins for the scaling estimator in bench.py (no Spark needed).
 
-The scaling block's spatial quiet-window exposure (round 5) binds each
-leg visit to the quietest of the disjoint candidate vCPU sets of its
-width, chosen by a short CPU/LLC-bound probe. These tests pin the pure
-logic — candidate-set construction, probe plumbing, steal correction,
-and leg-capacity math — so a refactor cannot silently change the
-recorded estimator's definition.
+The scaling block's one estimator is the steal-corrected, cross-visit
+two-size marginal: per leg, (big − small) / (t_big − t_small) over the
+min steal-corrected times, and efficiency = min(m_4N / m_N / 4, 1).
+These tests pin its definition, its collapsed-denominator guard, its
+reproduction of the recorded round-5 runs, and the narrow-box guard.
 """
 
 from __future__ import annotations
 
+import json
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+import pytest
+
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _REPO)
 
 import bench
 
-
-def test_candidate_sets_disjoint_and_sized():
-    total = os.cpu_count() or 1
-    for cores in (2, 8):
-        sets = bench._candidate_cpusets(cores)
-        assert sets, "at least one candidate set"
-        seen: set[int] = set()
-        for s in sets:
-            lo, hi = (int(x) for x in s.split("-"))
-            ids = set(range(lo, hi + 1))
-            assert len(ids) == cores
-            assert not (ids & seen), "candidate sets must be disjoint"
-            assert max(ids) < total
-            seen |= ids
-        if total >= 2 * cores:
-            assert len(sets) >= 2, "a big box must offer spatial alternatives"
-
-
-def test_candidate_sets_small_box_fallback():
-    # a box narrower than 2x the leg width has no spatial alternative:
-    # fall back to the classic 0..cores-1 binding
-    real = os.cpu_count
-    try:
-        os.cpu_count = lambda: 8  # type: ignore[assignment]
-        assert bench._candidate_cpusets(8) == ["0-7"]
-    finally:
-        os.cpu_count = real  # type: ignore[assignment]
-
-
-def test_cpu_probe_worker_positive_and_deterministic_shape():
-    ops = bench._cpu_probe_worker(0.05)
-    assert ops > 0
-
-
-def test_pick_cpuset_returns_argmax_member(monkeypatch):
-    probes = {"0-1": 100.0, "8-9": 300.0, "16-17": 200.0}
-    monkeypatch.setattr(
-        bench, "_candidate_cpusets", lambda cores: list(probes)
-    )
-    monkeypatch.setattr(
-        bench, "_cpu_probe_subprocess", lambda s, w: probes[s]
-    )
-    best, ops, recorded = bench._pick_cpuset(2)
-    assert best == "8-9" and ops == 300.0 and recorded == probes
+SMALL, BIG = 1_000_000, 4_000_000
 
 
 def test_steal_correction_and_leg_capacity_marginal():
-    small, big = bench.SCALING_TURNS_SMALL, bench.SCALING_TURNS
     samples = [
-        {"turns": small, "sec": 30.0, "steal": 0.0},
-        {"turns": big, "sec": 90.0, "steal": 0.5},  # corrected → 45.0
-        {"turns": big, "sec": 70.0, "steal": 0.0},
+        {"turns": SMALL, "sec": 30.0, "steal": 0.0},
+        {"turns": BIG, "sec": 90.0, "steal": 0.5},  # corrected → 45.0
+        {"turns": BIG, "sec": 70.0, "steal": 0.0},
     ]
-    cap = bench._leg_capacity(samples)
-    # raw: min big 70 → marginal (big-small)/(70-30)
-    assert abs(cap["marginal_raw"] - (big - small) / 40.0) < 1e-9
-    # corrected: min corrected big = 45 → slope over 15s
-    assert abs(cap["marginal_corr"] - (big - small) / 15.0) < 1e-9
-    assert abs(cap["tput_raw"] - big / 70.0) < 1e-9
+    cap = bench._leg_capacity(samples, SMALL, BIG)
+    # corrected: min corrected big = 45 → slope over 15 s
+    assert abs(cap["marginal_corr"] - (BIG - SMALL) / 15.0) < 1e-9
+    # raw single-size throughput: min raw big = 70
+    assert abs(cap["tput_raw"] - BIG / 70.0) < 1e-9
 
 
 def test_leg_capacity_guards_collapsed_denominator():
-    small, big = bench.SCALING_TURNS_SMALL, bench.SCALING_TURNS
     samples = [
-        {"turns": small, "sec": 60.0, "steal": 0.0},
-        {"turns": big, "sec": 61.0, "steal": 0.0},  # gap < 10% of big
+        {"turns": SMALL, "sec": 60.0, "steal": 0.0},
+        {"turns": BIG, "sec": 61.0, "steal": 0.0},  # gap < 10% of big
     ]
-    cap = bench._leg_capacity(samples)
-    assert cap["marginal_raw"] is None and cap["marginal_corr"] is None
+    assert bench._leg_capacity(samples, SMALL, BIG)["marginal_corr"] is None
+    ok = [{"turns": SMALL, "sec": 10.0, "steal": 0.0},
+          {"turns": BIG, "sec": 40.0, "steal": 0.0}]
+    summary = bench._scaling_summary(samples, ok, SMALL, BIG)
+    assert summary["marginal_tput_n"] is None
+    assert summary["efficiency"] is None
+
+
+@pytest.mark.parametrize(
+    "name, m_n, m_4n",
+    [
+        ("bench_r5_detail_run2.json", 36067.9, 153217.6),
+        ("bench_r5_detail_run3.json", 32969.1, 139534.9),
+    ],
+)
+def test_estimator_reproduces_recorded_r5_runs(name, m_n, m_4n):
+    with open(os.path.join(_REPO, "docs", name)) as fh:
+        rec = json.load(fh)["scaling"]
+    out = bench._scaling_summary(
+        rec["samples_n"], rec["samples_4n"], rec["n_turns_small"], rec["n_turns"]
+    )
+    assert abs(out["marginal_tput_n"] - m_n) <= 0.1
+    assert abs(out["marginal_tput_4n"] - m_4n) <= 0.1
+    assert out["efficiency"] == 1.0
+
+
+def test_narrow_box_skips_without_starting_a_leg(monkeypatch):
+    def _no_subprocess(*args, **kwargs):
+        raise AssertionError("the scaling block started a subprocess")
+
+    monkeypatch.setattr("subprocess.run", _no_subprocess)
+    monkeypatch.setattr(os, "cpu_count", lambda: 4 * bench.SCALING_BASE - 1)
+    rec = bench._measure_scaling()
+    assert rec["efficiency"] is None and rec["skipped"]
+    assert rec["cores_4n"] == 4 * bench.SCALING_BASE

@@ -21,6 +21,10 @@ compare:
 3. **encoding assumptions** — no vocabulary word contains the chr(31)
    separator, and doc_id is unique (the token-count mirror aggregates
    by doc_id and joins back).
+
+The mirrors split words on Java's ``\\s`` class spelled out,
+``[ \\t\\n\\x0b\\f\\r]+``, as the trainer and ``bpe_encode`` do: RE2's
+``\\s`` keeps ``\\x0b`` inside a word.  A hand-built table pins that.
 """
 
 from __future__ import annotations
@@ -47,7 +51,8 @@ def _vocab(sf: str) -> Counter:
     rows = con.execute(
         "SELECT word, count(*) FROM ("
         "  SELECT unnest(list_filter("
-        "    string_split_regex(lower(coalesce(text, '')), '\\s+'),"
+        "    string_split_regex(lower(coalesce(text, '')),"
+        "                       '[ \\t\\n\\x0b\\f\\r]+'),"
         "    x -> x <> '')) AS word"
         f"  FROM read_parquet('{sf}/documents.parquet'))"
         "GROUP BY word"
@@ -123,3 +128,29 @@ def test_encoding_assumptions(sf):
         f"duplicate doc_ids at {sf}: {dup[:5]} — the token-count "
         "mirror's group-and-join-back assumes uniqueness"
     )
+
+
+def test_token_counts_mirror_splits_vertical_tab_like_spark(spark):
+    """A doc holding \\x0b: the DuckDB mirror must count the same words
+    and tokens as Spark's bpe_train + bpe_encode (q_bpe_token_counts)."""
+    from __spark_entry__ import _bpe_token_counts_sql
+    from neuronews_spark.operators.tokenizer import bpe_encode, bpe_train
+
+    rows = [
+        (1, "low lower\x0blowest low"),
+        (2, "newer\x0bnewest wider lower"),
+        (3, ""),
+    ]
+    docs = spark.createDataFrame(rows, "doc_id bigint, text string")
+    want = sorted(
+        tuple(r)
+        for r in bpe_encode(docs, bpe_train(docs, N_MERGES))
+        .select("doc_id", "n_words", "n_bpe_tokens")
+        .collect()
+    )
+    con = duckdb.connect()
+    con.execute("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")
+    con.executemany("INSERT INTO documents VALUES (?, ?)", rows)
+    got = sorted(con.execute(_bpe_token_counts_sql(N_MERGES)).fetchall())
+    con.close()
+    assert got == want
