@@ -3101,7 +3101,8 @@ def _cc_over_jaccard_pairs_cte() -> str:
         WITH RECURSIVE dd AS MATERIALIZED (
           SELECT doc_id, source,
                  list_distinct(list_transform(
-                   list_filter(string_split_regex(text, '\\s+'), x -> x <> ''),
+                   list_filter(string_split_regex(text, '[ \\t\\n\\x0b\\f\\r]+'),
+                               x -> x <> ''),
                    x -> lower(x))) AS toks
           FROM documents),
         pairs AS (
@@ -3327,7 +3328,7 @@ def _token_shingle_pair_ctes(threshold: float) -> str:
         tk AS (
           SELECT doc_id,
                  list_filter(string_split_regex(lower(coalesce(text, '')),
-                                                '\\s+'),
+                                                '[ \\t\\n\\x0b\\f\\r]+'),
                              t -> t <> '') AS toks
           FROM documents),
         nz AS MATERIALIZED (
@@ -3561,20 +3562,52 @@ def _relation_matches_sql() -> str:
     mirror cannot drift).  Factored out so
     tests/test_relations_oracle_guard.py replays the EXACT scan SQL the
     oracle runs when pinning RE2-vs-CPython engine agreement."""
-    from neuronews_spark.operators.relations import RELATIONSHIP_PATTERNS
-
-    per_pattern = []
-    for rtype, patterns in RELATIONSHIP_PATTERNS.items():
-        for p in patterns:
-            lit = "(?i)" + p  # operator compiles with re.IGNORECASE
-            per_pattern.append(f"""
+    per_pattern = [
+        f"""
               SELECT conv_id, '{rtype}' AS relation_type,
                      unnest(list_zip(
                        regexp_extract_all(doc_text, '{lit}', 1),
                        regexp_extract_all(doc_text, '{lit}', 2),
                        regexp_extract_all(doc_text, '{lit}', 0))) AS z
-              FROM assembled""")
+              FROM assembled"""
+        for rtype, lit in _relation_mirror_patterns()
+    ]
     return "\n              UNION ALL\n".join(per_pattern)
+
+
+def _relation_mirror_patterns() -> list[tuple[str, str]]:
+    """(relation_type, RE2 pattern) per operator pattern, in table order,
+    as _relation_matches_sql embeds them."""
+    from neuronews_spark.operators.relations import RELATIONSHIP_PATTERNS
+
+    return [
+        (rtype, "(?i)" + p)  # operator compiles with re.IGNORECASE
+        for rtype, patterns in RELATIONSHIP_PATTERNS.items()
+        for p in patterns
+    ]
+
+
+def _check_sql_regexes(patterns) -> None:
+    """Raise ValueError unless every pattern can sit in a single-quoted
+    DuckDB SQL literal as an RE2 regex: no ``'`` (it would end the
+    literal) and compilable by RE2 (CPython ``re`` also accepts
+    backreferences and lookaround, which RE2 rejects)."""
+    import duckdb
+
+    # one thread: no DuckDB worker threads are started at import
+    with duckdb.connect(config={"threads": 1}) as con:
+        for p in patterns:
+            if "'" in p:
+                raise ValueError(f"quote in an SQL-embedded regex: {p}")
+            try:
+                con.execute("SELECT regexp_matches('', ?)", [p])
+            except duckdb.Error as e:
+                raise ValueError(f"not an RE2 regex: {p} ({e})") from None
+
+
+# at import, so an edited operator pattern fails here, not as broken or
+# silently different mirror SQL
+_check_sql_regexes(p for _, p in _relation_mirror_patterns())
 
 
 def _entity_relations_sql() -> str:
@@ -6549,7 +6582,8 @@ def oracle_sql() -> dict[str, str]:
         "dup_ngram_coverage": """
             WITH tk AS (
               SELECT doc_id,
-                     list_filter(string_split_regex(lower(text), '\s+'),
+                     list_filter(string_split_regex(lower(text),
+                                                    '[ \\t\\n\\x0b\\f\\r]+'),
                                  x -> x <> '') AS t
               FROM documents),
             base AS MATERIALIZED (
@@ -6589,7 +6623,8 @@ def oracle_sql() -> dict[str, str]:
         "ngram_decontamination": """
             WITH tk AS (
               SELECT doc_id,
-                     list_filter(string_split_regex(lower(coalesce(text, '')), '\\s+'),
+                     list_filter(string_split_regex(lower(coalesce(text, '')),
+                                                    '[ \\t\\n\\x0b\\f\\r]+'),
                                  x -> x <> '') AS t
               FROM documents),
             g AS MATERIALIZED (
@@ -6626,7 +6661,7 @@ def oracle_sql() -> dict[str, str]:
             WITH tk AS MATERIALIZED (
               SELECT doc_id,
                      list_filter(string_split_regex(lower(coalesce(text, '')),
-                                                    '\\s+'),
+                                                    '[ \\t\\n\\x0b\\f\\r]+'),
                                  x -> x <> '') AS t
               FROM documents),
             base AS MATERIALIZED (
@@ -6780,7 +6815,8 @@ def oracle_sql() -> dict[str, str]:
         "bloom_decontamination": """
             WITH tk AS (
               SELECT doc_id,
-                     list_filter(string_split_regex(lower(coalesce(text, '')), '\\s+'),
+                     list_filter(string_split_regex(lower(coalesce(text, '')),
+                                                    '[ \\t\\n\\x0b\\f\\r]+'),
                                  x -> x <> '') AS t
               FROM documents),
             g AS MATERIALIZED (

@@ -44,7 +44,7 @@ _REPO = os.path.dirname(os.path.abspath(__file__))
 if _REPO not in sys.path:
     sys.path.insert(0, _REPO)
 
-from neuronews_spark.session import pin_worker_thread_pools
+from neuronews_spark.session import CODEGEN_CACHE_ENTRIES, pin_worker_thread_pools
 
 pin_worker_thread_pools()  # before the JVM starts — see session.py
 
@@ -158,6 +158,7 @@ def _session(cores: int) -> SparkSession:
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     if cores <= 8:
         builder = builder.config(

@@ -17,6 +17,18 @@ import os
 
 from pyspark.sql import SparkSession
 
+# Size of Spark's generated-code class cache
+# (``spark.sql.codegen.cache.maxEntries``, an LRU that defaults to 100).
+# One EntityResolutionPipeline.run generates about 172 distinct classes and
+# visits them in the same order every run, so under the default each class
+# is evicted before its next use: every warm run recompiled 168-173 classes
+# with Janino on the driver thread (and the JIT then compiled them again).
+# With 2000 entries a warm run compiles 0-8. This is a *static* SQL conf:
+# it only takes effect on the builder that creates the JVM's first session,
+# so every session builder in the repo (this factory, bench.py's
+# ``_session``, the tests' ``spark`` fixture) sets it from this constant.
+CODEGEN_CACHE_ENTRIES = 2000
+
 
 def pin_worker_thread_pools() -> None:
     """Pin BLAS/OMP/Arrow thread pools to 1 thread per Python worker.
@@ -106,6 +118,7 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     if shuffle_partitions is not None:
         builder = builder.config(

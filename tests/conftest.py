@@ -2,7 +2,7 @@ from __future__ import annotations
 
 import pytest
 
-from neuronews_spark.session import pin_worker_thread_pools
+from neuronews_spark.session import CODEGEN_CACHE_ENTRIES, pin_worker_thread_pools
 
 pin_worker_thread_pools()  # before the JVM starts
 
@@ -21,6 +21,7 @@ def spark() -> SparkSession:
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", "4g")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .getOrCreate()
     )
     yield s

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import duckdb
+
 from neuronews_spark.operators.dedup import (
     bloom_ngram_decontaminate,
     ngram_decontaminate,
@@ -57,3 +59,33 @@ def test_bloom_is_approximate_with_tiny_filter(spark):
         train, eval_, n=13, m_bits=256, k=2
     ).collect()[0]
     assert bloom["n_dirty_grams_bloom"] > 0
+
+
+def test_decontamination_mirror_splits_vertical_tab_like_spark(spark):
+    """A doc holding \\x0b: the DuckDB ngram_decontamination mirror must
+    tokenize like Spark's Java ``\\s+`` split, which (unlike RE2's ``\\s``)
+    treats \\x0b as whitespace. Eval doc 5 quotes train doc 1 verbatim."""
+    from __spark_entry__ import oracle_sql
+
+    rows = [
+        (1, "alpha beta gamma"),
+        (5, "alpha\x0bbeta gamma"),
+        (10, "delta\x0bepsilon"),
+    ]
+    docs = spark.createDataFrame(rows, "doc_id bigint, text string")
+    cols = ["eval_id", "n_grams", "n_dirty_grams", "dirty_frac", "contaminated"]
+    want = sorted(
+        tuple(r)
+        for r in ngram_decontaminate(
+            docs.filter("doc_id % 5 != 0"), docs.filter("doc_id % 5 = 0"), n=13
+        ).select(*cols).collect()
+    )
+    con = duckdb.connect()
+    con.execute("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")
+    con.executemany("INSERT INTO documents VALUES (?, ?)", rows)
+    got = sorted(con.execute(
+        f"SELECT {', '.join(cols)} FROM ({oracle_sql()['ngram_decontamination']})"
+    ).fetchall())
+    con.close()
+    assert want == [(5, 1, 1, 1.0, True), (10, 1, 0, 0.0, False)]
+    assert got == want

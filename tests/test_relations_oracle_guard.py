@@ -78,3 +78,15 @@ def test_re2_matches_cpython_re_on_corpus(sf):
         f"regex engines diverged at {sf}: "
         f"python-only={list(missing)[:3]} re2-only={list(extra)[:3]}"
     )
+
+
+@pytest.mark.parametrize(
+    "bad", [r"(\w+) o'neil (\w+)", r"(\w+)\s+\1", r"(?<=by)\s+(\w+)"]
+)
+def test_sql_regex_check_rejects_quote_and_non_re2(bad):
+    """The import-time check on the patterns _relation_matches_sql embeds
+    in single-quoted SQL: a quote, a backreference and a lookbehind (both
+    valid CPython ``re``, neither RE2) are each rejected; the operator's
+    own table passed the same check when ``__spark_entry__`` was imported."""
+    with pytest.raises(ValueError):
+        entrymod._check_sql_regexes([bad])
