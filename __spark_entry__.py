@@ -772,11 +772,12 @@ def q_bpe_top_pairs(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def q_bpe_merges(spark: SparkSession, sf: str) -> DataFrame:
-    """Distributed BPE tokenizer training, 12 merges over the corpus:
-    per iteration one pair-count shuffle on the DISTINCT-WORD table +
-    a 1-row argmax + a JVM-side fold applying the merge, plan truncated
-    per round.  Returns the learned merge table (step, left, right,
-    pair_freq) in order — the merges.txt a tokenizer ships."""
+    """Distributed BPE tokenizer training, 12 merges over the corpus
+    (``bpe_train`` at its default batch_k=1, the sequential algorithm):
+    per round one pair-count shuffle on the DISTINCT-WORD table + a
+    bounded argmax collect + a JVM-side fold applying the merge, plan
+    truncated per round.  Returns the learned merge table (step, left,
+    right, pair_freq) in order — the merges.txt a tokenizer ships."""
     _prep(spark)
     from neuronews_spark.operators.tokenizer import bpe_train
 
@@ -3368,9 +3369,10 @@ def _bpe_chain_ctes(n_merges: int) -> str:
     OWN delimiters, so back-to-back occurrences of the merged pair
     ([a,b,a,b]) do not share a separator character and replace's
     continue-after-substitution scan merges BOTH, exactly Sennrich's
-    non-overlapping left-to-right application (tokenizer._apply_merge;
-    a single shared separator under-merges that case — pinned by
-    tests/test_bpe_oracle_guard.py's replace-simulation kernel).  An
+    non-overlapping left-to-right application (the fold in
+    tokenizer.bpe_train; a single shared separator under-merges that
+    case — pinned by tests/test_bpe_oracle_guard.py's replace-simulation
+    kernel).  An
     empty b{{i}} (early stop) leaves the word table unchanged via the
     NULL-guarded CASE, so later steps stay empty too.  chr(31) cannot
     occur inside a symbol (symbols are word characters + '</w>'; the
@@ -3417,9 +3419,9 @@ def _bpe_chain_ctes(n_merges: int) -> str:
 
 
 def _bpe_merges_sql(n_merges: int = 12) -> str:
-    """DuckDB mirror of q_bpe_merges (tokenizer.bpe_train, 12 merges):
-    the learned merge table read off the unrolled chain — one row per
-    step's argmax.  Integer-only surface; binary collation on the
+    """DuckDB mirror of q_bpe_merges (tokenizer.bpe_train at batch_k=1,
+    12 merges): the learned merge table read off the unrolled chain —
+    one row per step's argmax.  Integer-only surface; binary collation on the
     symbol tie-break matches Spark's UTF8-binary ordering."""
     union = "\n            UNION ALL\n".join(
         f'            SELECT {i} AS step, l AS "left", r AS "right", '
@@ -3544,8 +3546,10 @@ def _mention_extraction_sql() -> str:
     """DuckDB mirror of q_mention_extraction: rebuild the planted
     transcripts (_planted_conv_ctes), then replay the extraction kernel
     (_mention_kernel_parts) — the SQL twin of
-    mentions.mention_structs_column (itself differentially tested
-    against the Arrow-UDF kernel)."""
+    mentions.extract_mentions_py, the kernel of the Arrow UDF.  Known
+    gap (latent on the planted corpus): the mirror's RE2 ``\\s+`` word
+    split keeps \\x0b, \\xa0, \\x1c-\\x1f and \\x85 inside a word, where
+    Python's ``str.split()`` splits on them."""
     ctes, select = _mention_kernel_parts()
     return f"""
         WITH {_planted_conv_ctes().strip()},

@@ -56,8 +56,8 @@ def node_id_py(entity_type: str, name: str) -> str:
     reference's surrogate scheme, model.py:27-34):
     ``lower(type) + ':' + md5(f'{type}:{lower(ws-collapsed name)}')[:12]``.
     Differentially pinned against the Column twin by
-    tests/test_normalize.py and, end-to-end, by the columnar-vs-UDF
-    extractor differential (tests/test_mentions.py)."""
+    tests/test_normalize.py and, on extracted mentions, by
+    tests/test_mentions.py."""
     import hashlib
 
     mn = _WS.sub(" ", name or "").strip().lower()

@@ -58,7 +58,6 @@ def block_keys_column(
     norm: Column,
     n_hashes: int = 16,
     bands: int = 4,
-    with_token_keys: bool = True,
 ) -> Column:
     """Array of blocking keys for one vertex (all modalities, type-scoped)."""
     squashed = F.regexp_replace(norm, " ", "")
@@ -76,14 +75,11 @@ def block_keys_column(
             minhash_band_keys(char_shingles(norm), n_hashes=n_hashes, bands=bands),
             lambda k: F.concat_ws("|", k, entity_type),
         ),
+        F.transform(
+            tokens(norm),
+            lambda t: F.concat_ws("|", F.lit("t"), entity_type, t),
+        ),
     ]
-    if with_token_keys:
-        keys.append(
-            F.transform(
-                tokens(norm),
-                lambda t: F.concat_ws("|", F.lit("t"), entity_type, t),
-            )
-        )
     return F.array_distinct(F.concat(*keys))
 
 
@@ -91,7 +87,6 @@ def build_blocks(
     vertices: DataFrame,
     n_hashes: int = 16,
     bands: int = 4,
-    with_token_keys: bool = True,
 ) -> DataFrame:
     """vertices(entity_type, name, norm, node_id, ...) →
     (block_key, node_id, entity_type, name, norm): one row per (vertex, key).
@@ -103,7 +98,6 @@ def build_blocks(
                 F.col("norm"),
                 n_hashes=n_hashes,
                 bands=bands,
-                with_token_keys=with_token_keys,
             )
         ).alias("block_key"),
         "node_id",

@@ -14,7 +14,7 @@ at most — while *application* is fully distributed: the approved log
 consolidates into four tiny broadcast artifacts (rename map, alias
 add/remove lists, property upserts/removals, merge id_map) and one pass
 of joins applies them to arbitrarily large ``nodes``/``edges`` tables.
-Merge follows ``_apply_merge`` semantics (``entity_corrections.py:
+Merge follows the reference's merge semantics (``entity_corrections.py:
 298-353``): absorb source aliases + name into the target, target wins
 property conflicts, rewrite edges dropping would-be self-loops, remove
 the source node.

@@ -28,8 +28,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from neuronews_spark.functions.normalize import node_id, normalize_name
-
 # kg_updater.py:89 — capitalized sequences of 1-4 tokens
 CAP_SEQ = re.compile(r"\b([A-Z][a-z]{1,}(?:\s+[A-Z][a-z]{1,}){0,3})\b")
 
@@ -78,8 +76,8 @@ STOP = frozenset(
 # → 19.5 s at 8: the JVM expression work was memory-bound, not CPU-
 # bound) and the largest single stage; the memo moves that work off the
 # per-instance path entirely. The Python norm/id twins are pinned to
-# the Column twins by tests/test_normalize.py and the columnar-vs-UDF
-# extractor differential below.
+# the Column twins by tests/test_normalize.py and, on extracted
+# mentions, by tests/test_mentions.py.
 MENTION_RESULT = T.StructType(
     [
         T.StructField("names", T.ArrayType(T.StringType())),
@@ -114,8 +112,9 @@ def extract_mentions_py(text: str) -> list[tuple[str, str]]:
     surviving mentions* are ever looked up, and those are always
     capitalized — so the word scan strips/indexes only capitalized words
     (~10x fewer rstrip calls than the naive full-map build; extraction is
-    the pipeline's largest Python cost). Differentially tested against the
-    independent Column-math implementation."""
+    the pipeline's largest Python cost). The DuckDB mirror
+    (``__spark_entry__._mention_kernel_parts``) is its independent
+    SQL twin."""
     text = text or ""
 
     seen: set[str] = set()
@@ -181,68 +180,6 @@ def _extract_mentions_udf(texts: pd.Series) -> pd.DataFrame:
     )
 
 
-_CAP_SEQ_JAVA = r"\b([A-Z][a-z]{1,}(?:\s+[A-Z][a-z]{1,}){0,3})\b"
-_TRAIL_PUNCT_RE = "[.,;:\"']+$"
-
-
-def mention_structs_column(text) -> F.Column:
-    """The extractor kernel as PURE Column math — semantically identical to
-    :func:`extract_mentions_py` (differentially tested), with no Python
-    workers; measured ~10x slower than the Arrow UDF, see
-    :func:`extract_mentions_columnar`.
-
-    Per conversation: regex scan (first-occurrence order preserved by
-    ``array_distinct``), stop/length filters, and the preceding-word type
-    inference re-expressed with ``array_position`` over the stripped word
-    array (the first occurrence at word index ≥1 — exactly the Python
-    ``setdefault`` map's content)."""
-    txt = F.coalesce(text, F.lit(""))
-    stop_arr = F.array(*[F.lit(s) for s in sorted(STOP)])
-    org_arr = F.array(*[F.lit(s) for s in sorted(ORG_SUFFIXES)])
-    title_arr = F.array(*[F.lit(s) for s in sorted(PERSON_TITLES)])
-
-    names = F.array_distinct(
-        F.regexp_extract_all(txt, F.lit(_CAP_SEQ_JAVA), F.lit(1))
-    )
-    kept = F.filter(
-        names,
-        lambda n: (F.length(n) >= 3)
-        & ~F.array_contains(stop_arr, F.element_at(F.split(n, r"\s+"), 1))
-        & ~F.array_contains(stop_arr, n),
-    )
-
-    words = F.filter(F.split(txt, r"\s+"), lambda w: w != F.lit(""))
-    stripped = F.transform(
-        words, lambda w: F.regexp_replace(w, _TRAIL_PUNCT_RE, "")
-    )
-    # positions ≥2 (1-based): the Python preceding-map only records
-    # occurrences at word index ≥1, so a mention whose token opens the
-    # document looks up its next occurrence instead
-    tail = F.slice(stripped, 2, F.greatest(F.size(stripped) - 1, F.lit(0)))
-
-    def _mk(name):
-        toks = F.split(name, r"\s+")
-        first = F.element_at(toks, 1)
-        j = F.array_position(tail, first)
-        preceding = F.when(
-            j > 0, F.element_at(stripped, j.cast("int"))
-        ).otherwise(F.lit(""))
-        preceding = F.regexp_replace(preceding, r"\.+$", "")
-        etype = (
-            F.when(
-                F.array_contains(title_arr, first)
-                | F.array_contains(title_arr, preceding),
-                "Person",
-            )
-            .when(F.exists(toks, lambda t: F.array_contains(org_arr, t)), "Organization")
-            .when(F.size(toks) == 2, "Person")
-            .otherwise(F.lit("Concept"))
-        )
-        return F.struct(name.alias("name"), etype.alias("entity_type"))
-
-    return F.transform(kept, _mk)
-
-
 def extract_mentions(conversations: DataFrame, text_col: str = "doc_text") -> DataFrame:
     """conversations(conv_id, doc_text, ...) → one row per extracted mention.
 
@@ -254,11 +191,11 @@ def extract_mentions(conversations: DataFrame, text_col: str = "doc_text") -> Da
 
     Mentions with empty ``norm`` are dropped (the resolver refuses them:
     resolution.py:163-164). Runs as the Arrow-batched pandas UDF: measured
-    ~10x FASTER than the pure-Column-math variant
-    (:func:`extract_mentions_columnar`) at 15k conversations — Spark's
-    higher-order functions are interpreted (no codegen) and re-evaluate
-    captured arrays per element, while the Python kernel is one tight
-    regex loop amortized over ~10k-row Arrow batches.
+    ~10x FASTER than a pure-Column-math version of the same kernel at 15k
+    conversations — Spark's higher-order functions are interpreted (no
+    codegen) and re-evaluate captured arrays per element, while the
+    Python kernel is one tight regex loop amortized over ~10k-row Arrow
+    batches.
     """
     raw = conversations.select(
         "conv_id", _extract_mentions_udf(F.col(text_col)).alias("m")
@@ -283,35 +220,6 @@ def extract_mentions(conversations: DataFrame, text_col: str = "doc_text") -> Da
     )
     return (
         exploded.filter(F.col("norm") != "")
-        .withColumn("confidence", F.lit(0.8))
-        .withColumn("extractor", F.lit("heuristic-ner"))
-    )
-
-
-def extract_mentions_columnar(
-    conversations: DataFrame, text_col: str = "doc_text"
-) -> DataFrame:
-    """Pure-Column-math variant of :func:`extract_mentions` (via
-    :func:`mention_structs_column`) — semantically identical
-    (differentially tested) but measured ~10x slower than the Arrow UDF
-    default at this kernel's complexity; kept as the no-Python-workers
-    alternative and as documentation of the measured trade-off."""
-    exploded = conversations.select(
-        "conv_id",
-        F.posexplode(mention_structs_column(F.col(text_col))).alias(
-            "mention_idx", "m"
-        ),
-    ).select(
-        "conv_id",
-        "mention_idx",
-        F.col("m.name").alias("name"),
-        F.col("m.entity_type").alias("entity_type"),
-    )
-    out = exploded.withColumn(
-        "norm", normalize_name(F.col("name"), F.col("entity_type"))
-    ).filter(F.col("norm") != "")
-    return (
-        out.withColumn("node_id", node_id(F.col("entity_type"), F.col("name")))
         .withColumn("confidence", F.lit(0.8))
         .withColumn("extractor", F.lit("heuristic-ner"))
     )

@@ -15,12 +15,12 @@ Spark shape (the 100 TB story):
   scale that is ~10^8 rows regardless of corpus size, the same
   compression trick Sennrich's reference implementation uses with its
   ``collections.Counter`` vocab.
-- Each iteration is ONE shuffle (pair-count groupBy) + a broadcast
-  1-row argmax joined back in (no driver-side loop state, the
-  ``graph.py`` dangling-mass pattern) + a narrow per-row fold that
-  applies the merge left-to-right.  ``localCheckpoint`` truncates the
-  plan per round so iteration N's plan does not re-derive rounds 1..N-1
-  (the pagerank/BFS pattern).
+- Each round is ONE shuffle (pair-count groupBy) + a bounded collect
+  of the top candidates (the argmax, or up to ``batch_k`` symbol-
+  disjoint merges) + a narrow per-row fold that applies the round's
+  merges left-to-right.  ``localCheckpoint`` truncates the plan per
+  round so round N's plan does not re-derive rounds 1..N-1 (the
+  pagerank/BFS pattern).
 - The argmax tie-break is total (count DESC, left ASC, right ASC), so
   the learned merge table is deterministic across partitionings,
   retries, and engines — required for a reproducible tokenizer.
@@ -113,121 +113,52 @@ def bpe_pair_counts(
     return counts
 
 
-def _apply_merge(sym: Column, left: Column, right: Column) -> Column:
-    """Left-to-right non-overlapping replacement of (left, right) with
-    their concatenation — the fold is equivalent to Sennrich's scan
-    ``if s[i]==a and s[i+1]==b: emit ab, skip 2`` because a just-merged
-    tail element equals ``a || b`` which (b being non-empty) can never
-    equal ``a`` again within the same pass."""
-    return F.aggregate(
-        sym,
-        F.array().cast("array<string>"),
-        lambda acc, x: F.when(
-            (F.size(acc) > 0)
-            & (F.element_at(acc, -1) == left)
-            & (x == right),
-            F.concat(
-                F.slice(acc, 1, F.size(acc) - 1),
-                F.array(F.concat(left, right)),
-            ),
-        ).otherwise(F.concat(acc, F.array(x))),
-    )
-
-
 def bpe_train(
-    docs: DataFrame, n_merges: int, text_col: str = "text"
+    docs: DataFrame,
+    n_merges: int,
+    text_col: str = "text",
+    batch_k: int = 1,
 ) -> DataFrame:
     """Learn ``n_merges`` BPE merges over the corpus; returns the merge
     table ``(step, left, right, pair_freq)`` in learned order — the
     artifact a tokenizer ships (merges.txt).
 
-    Per iteration: pair-count groupBy (one keyed shuffle), 1-row argmax
-    with the total tie-break taken via ``limit(1)``
-    (TakeOrderedAndProject — no global sort), broadcast back in with a
-    1-row crossJoin, and a JVM-side fold applying the merge to every
-    word's symbol array.  The word table is ``localCheckpoint``ed per
-    round so the plan stays O(1) deep.  Stops early if no pair occurs
-    twice (nothing left worth merging).
+    Each round runs one pair-count aggregation and keeps up to
+    ``batch_k`` SYMBOL-DISJOINT merges from it: the top candidates are
+    scanned in the total tie-break order (freq DESC, left, right) and
+    greedily kept while their symbols — left, right, AND the new token
+    left||right — are disjoint from every symbol already kept in the
+    round.  Disjointness makes the batch exact w.r.t. round-start counts
+    (merging (a,b) cannot create, destroy, or overlap an occurrence of a
+    disjoint (c,d)), so all kept merges apply in ONE fold pass over the
+    word table.  Stops early if no pair occurs twice (nothing left worth
+    merging).
 
-    Oracled since round 5 (__spark_entry__._bpe_merges_sql): the loop
-    is unrolled as chained SQL CTEs, with DuckDB ``replace`` as the
-    left-to-right merge application; a differential pytest against a
-    pure-Python reference of the same algorithm remains in
-    tests/test_tokenizer.py.
-    """
-    words = (
-        word_counts(docs, text_col)
-        .select(_symbols(F.col("word")).alias("sym"), "freq")
-        .localCheckpoint(eager=False)
-    )
-    merges: list[tuple[int, str, str, int]] = []
-    for step in range(1, n_merges + 1):
-        pairs = (
-            words.select("freq", F.explode(_adjacent_pairs(F.col("sym"))).alias("p"))
-            .groupBy(F.col("p.left").alias("left"), F.col("p.right").alias("right"))
-            .agg(F.sum("freq").alias("pair_freq"))
-        )
-        best_rows = pairs.orderBy(
-            F.desc("pair_freq"), F.asc("left"), F.asc("right")
-        ).limit(1).collect()
-        # the argmax is a 1-row bounded collect (the centroid-sample
-        # class of driver action): its VALUE must enter the merge table
-        # we return, so the driver holds it either way
-        if not best_rows or best_rows[0]["pair_freq"] < 2:
-            break
-        best = best_rows[0]
-        merges.append((step, best["left"], best["right"], best["pair_freq"]))
-        words = words.select(
-            _apply_merge(
-                F.col("sym"), F.lit(best["left"]), F.lit(best["right"])
-            ).alias("sym"),
-            "freq",
-        ).localCheckpoint(eager=True)
-    spark = docs.sparkSession
-    return spark.createDataFrame(
-        merges, "step int, left string, right string, pair_freq bigint"
-    )
-
-
-def bpe_train_batched(
-    docs: DataFrame,
-    n_merges: int,
-    text_col: str = "text",
-    batch_k: int = 64,
-) -> DataFrame:
-    """Parallel-BPE trainer: learn ``n_merges`` merges in rounds of up
-    to ``batch_k`` SYMBOL-DISJOINT merges — the scale path next to
-    :func:`bpe_train`'s exact-sequential loop.
-
-    ``bpe_train`` schedules one Spark job per merge (argmax → fold), a
-    driver-paced sequence that no executor count parallelizes: a 32k
-    vocabulary is 32k+ sequential jobs. This variant selects a BATCH of
-    merges per round from one pair-count aggregation: the top candidates
-    are scanned in the total tie-break order (freq DESC, left, right)
-    and greedily kept while their symbols — left, right, AND the new
-    token left||right — are disjoint from every symbol already kept in
-    the round.  Disjointness makes the batch exact w.r.t. round-start
-    counts (merging (a,b) cannot create, destroy, or overlap an
-    occurrence of a disjoint (c,d)), so all kept merges apply in ONE
-    fold pass over the word table, and 32k merges become ~n_merges /
-    batch_k driver rounds.
-
-    The known, documented deviation from strict-sequential BPE: pairs
-    first CREATED by a merge (e.g. ("ab","c") after (a,b)) only become
-    candidates next round, so merge ORDER can differ from
-    :func:`bpe_train` when such a pair would out-rank the round's later
-    selections.  ``batch_k=1`` degenerates to the sequential algorithm
-    exactly (one pair per round, recount every round). Correctness is
-    pinned differentially: batch_k=1 vs the sequential pure-Python
-    reference, and batch_k>1 vs a pure-Python replica of THIS batched
-    algorithm (tests/test_tokenizer.py).
+    ``batch_k=1`` (the default) is Sennrich's exact sequential algorithm:
+    one merge per round, recounted every round — one driver round per
+    merge, which no executor count parallelizes (a 32k vocabulary is
+    32k+ rounds).  ``batch_k > 1`` cuts that to ~n_merges / batch_k
+    rounds, with one documented deviation: pairs first CREATED by a merge
+    (e.g. ("ab","c") after (a,b)) only become candidates next round, so
+    merge ORDER can differ from the sequential table when such a pair
+    would out-rank the round's later selections.
 
     Per round: one keyed pair-count shuffle, one bounded driver collect
-    (4*batch_k candidate rows — vocabulary-sized, never data-sized), one
-    JVM fold with an O(batch_k) literal map, one localCheckpoint to keep
-    the plan O(1) deep.
+    (max(4*batch_k, 16) candidate rows via ``limit`` —
+    TakeOrderedAndProject, vocabulary-sized, never data-sized), one JVM
+    fold with an O(batch_k) literal map, and one ``localCheckpoint`` so
+    the plan stays O(1) deep.  The fold is Sennrich's left-to-right
+    non-overlapping scan: a just-merged tail ``a || b`` is a new symbol,
+    disjoint from every pair kept this round, so it never merges again
+    within the same pass.
+
+    Oracled (__spark_entry__._bpe_merges_sql): the sequential loop is
+    unrolled as chained SQL CTEs, with DuckDB ``replace`` as the merge
+    application.  Differential pytests in tests/test_tokenizer.py pin
+    ``batch_k=1`` against a pure-Python reference of the sequential
+    algorithm and ``batch_k > 1`` against a pure-Python replica of the
+    batched one.
     """
-    sep = "\x00"  # cannot occur inside a symbol (symbols are word chars)
     words = (
         word_counts(docs, text_col)
         .select(_symbols(F.col("word")).alias("sym"), "freq")
@@ -244,6 +175,8 @@ def bpe_train_batched(
             .agg(F.sum("freq").alias("pair_freq"))
         )
         want = min(batch_k, n_merges - step)
+        # a bounded driver collect: the chosen merges' VALUES enter the
+        # merge table we return, so the driver holds them either way
         top = pairs.orderBy(
             F.desc("pair_freq"), F.asc("left"), F.asc("right")
         ).limit(max(4 * want, 16)).collect()
@@ -264,24 +197,28 @@ def bpe_train_batched(
         for a, b, cnt in chosen:
             step += 1
             merges.append((step, a, b, cnt))
+        # keyed by the pair itself: words are Java ``\s+`` splits, so a
+        # symbol can hold any non-whitespace character and no separator
+        # joins two symbols into an unambiguous string key
         merge_map = F.create_map(
             *[
-                F.lit(x)
+                x
                 for a, b, _ in chosen
-                for x in (a + sep + b, a + b)
+                for x in (F.array(F.lit(a), F.lit(b)), F.lit(a + b))
             ]
         )
-        joined = lambda acc, x: F.concat(F.element_at(acc, -1), F.lit(sep), x)  # noqa: E731
+        merged = lambda acc, x: F.element_at(  # noqa: E731
+            merge_map, F.array(F.element_at(acc, -1), x)
+        )
         words = words.select(
             F.aggregate(
                 F.col("sym"),
                 F.array().cast("array<string>"),
                 lambda acc, x: F.when(
-                    (F.size(acc) > 0)
-                    & F.element_at(merge_map, joined(acc, x)).isNotNull(),
+                    (F.size(acc) > 0) & merged(acc, x).isNotNull(),
                     F.concat(
                         F.slice(acc, 1, F.size(acc) - 1),
-                        F.array(F.element_at(merge_map, joined(acc, x))),
+                        F.array(merged(acc, x)),
                     ),
                 ).otherwise(F.concat(acc, F.array(x))),
             ).alias("sym"),

@@ -1,13 +1,13 @@
 """Pure-Python BPE reference kernels shared by the oracle guard
 (test_bpe_oracle_guard.py); the same algorithm test_tokenizer.py pins
-differentially against Spark's bpe_train (its text-level `_python_bpe`
-keeps its own vocab-keyed shape).
+differentially against Spark's bpe_train at batch_k=1 (its text-level
+`_python_bpe` keeps its own vocab-keyed shape).
 
 Three merge-application kernels live here so their EQUALITY can be
 asserted on the actual corpus:
 
 * :func:`apply_merge` — Sennrich's left-to-right non-overlapping scan
-  (the Spark ``tokenizer._apply_merge`` semantics);
+  (the semantics of the fold in Spark's ``tokenizer.bpe_train``);
 * :func:`sep_replace_apply` — the DuckDB mirror's semantics: each
   symbol encoded as ``SEP + x + SEP`` blocks concatenated, the pair
   replaced via Python ``str.replace`` (same continue-after-substitution

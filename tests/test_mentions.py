@@ -51,30 +51,69 @@ def test_single_token_no_context_is_concept():
 
 
 def test_spark_path_matches_python_kernel(spark):
-    texts = [
-        ("c1", "Geoffrey Hinton joined OpenAI Inc. We asked Dr. Hinton about Transformers."),
-        ("c2", "The Budget Committee met Acme Corp and Jane Smith on Monday."),
-        ("c3", ""),
-        ("c4", "no capitalized words here at all"),
-    ]
-    df = spark.createDataFrame(texts, "conv_id string, doc_text string")
-    got = extract_mentions(df).collect()
-    by_conv: dict[str, list] = {}
-    for r in sorted(got, key=lambda r: (r["conv_id"], r["mention_idx"])):
-        by_conv.setdefault(r["conv_id"], []).append(r)
-    for conv, text in texts:
-        expected = [
-            (n, t) for n, t in extract_mentions_py(text)
-            if norm_py(t, n)  # empty-norm mentions are filtered by the operator
-        ]
-        actual = [(r["name"], r["entity_type"]) for r in by_conv.get(conv, [])]
-        assert actual == expected, (conv, actual, expected)
-    # norm + node_id columns are populated
-    for r in got:
-        assert r["norm"] == norm_py(r["entity_type"], r["name"])
-        assert r["node_id"].startswith(r["entity_type"].lower() + ":")
-        assert r["confidence"] == 0.8
-        assert r["extractor"] == "heuristic-ner"
+    """The Arrow-UDF operator reproduces the Python kernel exactly — names,
+    types, document order — on hand cases (adversarial ones included) and
+    the synthetic corpus; its norm/node_id columns equal the Python twins,
+    which equal the Column twins on every surface the kernel extracts."""
+    from pyspark.sql import functions as F
+
+    from neuronews_spark.functions.normalize import node_id, normalize_name
+    from neuronews_spark.functions.simtext import node_id_py
+    from neuronews_spark.operators.conversations import assemble_conversations
+    from neuronews_spark.sources.synthetic import synthetic_transcripts
+
+    hand = spark.createDataFrame(
+        [
+            ("c1", "Geoffrey Hinton joined OpenAI Inc. We asked Dr. Hinton about Transformers."),
+            ("c2", "The Budget Committee met Acme Corp and Jane Smith on Monday."),
+            ("c3", ""),
+            ("c4", "no capitalized words here at all"),
+            ("h1", "Dr. Hinton met Geoffrey Hinton at Acme Corp."),
+            ("h2", "The Monday meeting covered Budget Planning."),
+            ("h3", "Al saw Al again, and Al. Smith spoke."),
+            ("h4", "President Obama and CEO Musk at Stanford University"),
+            ("h5", "Acme Corp met Acme Corp again, Acme Corp."),
+            ("h6", ""),
+            ("h7", "Xe Ab Cd Ef Gh Ij Kl"),  # >4-token runs split
+            ("h8", 'He said "Transformers" beat RNN models: Deep Learning.'),
+        ],
+        "conv_id string, doc_text string",
+    )
+    t = synthetic_transcripts(spark, n_turns=4000, turns_per_conv=10)
+    convs = assemble_conversations(t)
+    for df in (hand, convs):
+        texts = {r["conv_id"]: r["doc_text"] for r in df.collect()}
+        got = extract_mentions(df).collect()
+        by_conv: dict[str, list] = {}
+        for r in sorted(got, key=lambda r: (r["conv_id"], r["mention_idx"])):
+            by_conv.setdefault(r["conv_id"], []).append(r)
+        for conv, text in texts.items():
+            expected = [
+                (n, t) for n, t in extract_mentions_py(text)
+                if norm_py(t, n)  # empty-norm mentions are filtered by the operator
+            ]
+            actual = [(r["name"], r["entity_type"]) for r in by_conv.get(conv, [])]
+            assert actual == expected, (conv, actual, expected)
+        assert df is hand or len(got) > 100
+        for r in got:
+            assert r["norm"] == norm_py(r["entity_type"], r["name"])
+            assert r["node_id"] == node_id_py(r["entity_type"], r["name"])
+            assert r["confidence"] == 0.8
+            assert r["extractor"] == "heuristic-ner"
+        surfaces = sorted(
+            {(e, n) for text in texts.values() for n, e in extract_mentions_py(text)}
+        )
+        twins = spark.createDataFrame(
+            surfaces, "entity_type string, name string"
+        ).select(
+            "entity_type",
+            "name",
+            normalize_name(F.col("name"), F.col("entity_type")).alias("norm"),
+            node_id(F.col("entity_type"), F.col("name")).alias("node_id"),
+        )
+        for r in twins.collect():
+            assert r["norm"] == norm_py(r["entity_type"], r["name"]), r
+            assert r["node_id"] == node_id_py(r["entity_type"], r["name"]), r
 
 
 def test_distinct_vertices_collapse_case_variants(spark):
@@ -99,37 +138,3 @@ def test_distinct_vertices_collapse_case_variants(spark):
     assert v[0]["n_convs"] == 3
     assert v[0]["name"] == "Geoffrey  Hinton"  # longest surface elected
     assert set(v[0]["aliases"]) == {"Geoffrey Hinton", "Geoffrey  Hinton"}
-
-
-def test_columnar_extractor_matches_python_port(spark):
-    """Differential: the JVM Column-math extractor variant must reproduce
-    the Arrow-UDF default exactly — names, types, order — on the synthetic
-    corpus plus adversarial hand cases."""
-    from neuronews_spark.operators.conversations import assemble_conversations
-    from neuronews_spark.operators.mentions import (
-        extract_mentions,
-        extract_mentions_columnar,
-    )
-    from neuronews_spark.sources.synthetic import synthetic_transcripts
-
-    t = synthetic_transcripts(spark, n_turns=4000, turns_per_conv=10)
-    convs = assemble_conversations(t)
-
-    hand = spark.createDataFrame(
-        [
-            ("h1", "Dr. Hinton met Geoffrey Hinton at Acme Corp."),
-            ("h2", "The Monday meeting covered Budget Planning."),
-            ("h3", "Al saw Al again, and Al. Smith spoke."),
-            ("h4", "President Obama and CEO Musk at Stanford University"),
-            ("h5", "Acme Corp met Acme Corp again, Acme Corp."),
-            ("h6", ""),
-            ("h7", "Xe Ab Cd Ef Gh Ij Kl"),  # >4-token runs split
-            ("h8", 'He said "Transformers" beat RNN models: Deep Learning.'),
-        ],
-        "conv_id string, doc_text string",
-    )
-    for df in (convs, hand):
-        cols = ["conv_id", "mention_idx", "name", "entity_type", "norm", "node_id"]
-        got = sorted(map(tuple, extract_mentions_columnar(df).select(*cols).collect()))
-        want = sorted(map(tuple, extract_mentions(df).select(*cols).collect()))
-        assert got == want and (df is hand or len(got) > 100)

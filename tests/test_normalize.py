@@ -17,7 +17,7 @@ from neuronews_spark.functions.normalize import (
     node_id,
     normalize_name,
 )
-from neuronews_spark.functions.simtext import norm_py
+from neuronews_spark.functions.simtext import node_id_py, norm_py
 
 CASES = [
     ("Person", "Geoffrey Hinton"),
@@ -83,6 +83,7 @@ def test_node_id_matches_reference_scheme(spark):
         digest = hashlib.md5(f"{row['entity_type']}:{norm}".encode()).hexdigest()
         expected = f"{row['entity_type'].lower()}:{digest[:12]}"
         assert row["nid"] == expected, row
+        assert node_id_py(row["entity_type"], row["name"]) == expected, row
         assert row["mnorm"] == norm
 
 

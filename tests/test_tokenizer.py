@@ -219,7 +219,7 @@ def test_symbols_binds_to_passed_column(spark):
 
 
 def _python_bpe_batched(texts: list[str], n_merges: int, batch_k: int):
-    """Pure-Python replica of bpe_train_batched: round-start pair counts,
+    """Pure-Python replica of bpe_train at batch_k > 1: round-start pair counts,
     tie-break ordered candidates cut at max(4*want, 16), greedy
     symbol-disjoint selection (left, right, AND the concatenation), all
     kept merges applied in one left-to-right pass."""
@@ -277,28 +277,36 @@ def _rand_corpus(seed: int, n_texts: int = 40) -> list[str]:
     ]
 
 
-def test_bpe_train_batched_k1_equals_sequential(spark):
-    """batch_k=1 degenerates to the exact sequential algorithm."""
-    from neuronews_spark.operators.tokenizer import bpe_train_batched
+# Words are Java ``\s+`` splits, so a symbol can hold \x00. A fold keyed
+# by the string ``left + "\x00" + right`` takes the adjacency
+# ('q\x00q', 'q') in "pq\x00qq" for step 6's merge ('q', 'q\x00q'), and
+# then learns (10, 'p', 'qq\x00q', 2) where the sequential algorithm
+# learns (10, 'p', 'q\x00q', 2).
+_NUL_CORPUS = (
+    "pp pp pp \x00p\x00 \x00p\x00 pq\x00qq pq\x00qq qq\x00qp qq\x00qp qq\x00qp "
+    "qq\x00qp p\x00 p\x00 \x00q\x00q"
+)
 
-    texts = _rand_corpus(43)
-    docs = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], ["doc_id", "text"]
-    )
-    got = [tuple(r) for r in bpe_train_batched(docs, 10, batch_k=1).collect()]
-    assert got == _python_bpe(texts, 10)
+
+def test_bpe_train_k1_equals_sequential(spark):
+    """batch_k=1 is the exact sequential algorithm, also on words that
+    hold NUL characters."""
+    for texts in (_rand_corpus(43), [_NUL_CORPUS]):
+        docs = spark.createDataFrame(
+            [(i, t) for i, t in enumerate(texts)], ["doc_id", "text"]
+        )
+        got = [tuple(r) for r in bpe_train(docs, 10, batch_k=1).collect()]
+        assert got == _python_bpe(texts, 10), texts
 
 
 def test_bpe_train_batched_matches_python_replica(spark):
-    from neuronews_spark.operators.tokenizer import bpe_train_batched
-
     texts = _rand_corpus(44)
     docs = spark.createDataFrame(
         [(i, t) for i, t in enumerate(texts)], ["doc_id", "text"]
     )
     for k in (4, 8):
         got = [
-            tuple(r) for r in bpe_train_batched(docs, 16, batch_k=k).collect()
+            tuple(r) for r in bpe_train(docs, 16, batch_k=k).collect()
         ]
         assert got == _python_bpe_batched(texts, 16, k), f"batch_k={k}"
 
@@ -311,8 +319,6 @@ def test_bpe_train_batched_tracks_sequential_vocab(spark):
     32k-vocab run — forcing k comparable to the pool (k=8 here) starves
     the disjoint selection into junk merges (overlap drops to ~0.55,
     measured), which is the documented deviation, not a bug."""
-    from neuronews_spark.operators.tokenizer import bpe_train_batched
-
     sent = (
         "the quick brown fox jumps over the lazy dog and the small cat "
         "sleeps while many people read long books about systems and data"
@@ -331,7 +337,7 @@ def test_bpe_train_batched_tracks_sequential_vocab(spark):
         [(i, t) for i, t in enumerate(texts)], ["doc_id", "text"]
     )
     seq_tokens = {a + b for _, a, b, _ in _python_bpe(texts, 24)}
-    got = bpe_train_batched(docs, 24, batch_k=4).collect()
+    got = bpe_train(docs, 24, batch_k=4).collect()
     bat_tokens = {r["left"] + r["right"] for r in got}
     overlap = len(seq_tokens & bat_tokens) / max(len(seq_tokens), 1)
     assert overlap >= 0.8, (overlap, seq_tokens ^ bat_tokens)
