@@ -29,6 +29,8 @@ pin_worker_thread_pools()
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from neuronews_spark.functions.normalize import JAVA_WS, PY_WS
+
 DEFAULT_SF = os.path.join(os.path.dirname(_REPO), "testdata", "sf0.001")
 if not os.path.isdir(DEFAULT_SF):
     DEFAULT_SF = "/root/testdata/sf0.001"
@@ -172,6 +174,32 @@ def _sql_in(words: list[str]) -> str:
     return "(" + ", ".join(f"'{w}'" for w in words) + ")"
 
 
+# DuckDB whitespace: every mirror split or collapse goes through these two,
+# with the class of its Spark side — JAVA_WS under a Spark split or
+# regexp_replace, PY_WS under a Python kernel or its Column twin
+def _ws_split(expr: str, ws: str) -> str:
+    """``expr`` split on runs of ``ws``; empty tokens kept, as in Spark."""
+    return f"string_split_regex({expr}, '{ws}+')"
+
+
+def _ws_collapse(expr: str, ws: str) -> str:
+    """Each run of ``ws`` in ``expr`` replaced by one space."""
+    return f"regexp_replace({expr}, '{ws}+', ' ', 'g')"
+
+
+# five words per line: the newline injection of the repetition, clean-corpus
+# and line-dedup queries, shared by the Spark sides and the mirrors
+_NON_WS = JAVA_WS.replace("[", "[^", 1)
+_LINE_WRAP_RE = f"((?:{_NON_WS}+{JAVA_WS}+){{4}}{_NON_WS}+){JAVA_WS}+"
+
+
+def _five_word_lines(docs: DataFrame) -> DataFrame:
+    """(doc_id, text) with a newline after every fifth word."""
+    return docs.select(
+        "doc_id", F.regexp_replace(F.col("text"), _LINE_WRAP_RE, "$1\n").alias("text")
+    )
+
+
 # ---- SQL-expressible queries ----------------------------------------------
 
 def q_latest_event_per_user_type(spark: SparkSession, sf: str) -> DataFrame:
@@ -296,8 +324,11 @@ def q_exact_dup_groups(spark: SparkSession, sf: str) -> DataFrame:
 
 def q_token_stats(spark: SparkSession, sf: str) -> DataFrame:
     _prep(spark)
+    from neuronews_spark.operators.text_stats import ws_tokens
+
     d = _t(spark, sf, "documents")
-    toks = F.filter(F.split(F.col("text"), r"\s+"), lambda x: x != F.lit(""))
+    # NULL text keeps a NULL n_tokens, as the mirror's len() does
+    toks = F.when(F.col("text").isNotNull(), ws_tokens(F.col("text")))
     n_chars = F.length("text")
     n_tokens = F.size(toks)
     n_alpha = F.length(F.regexp_replace(F.col("text"), "[^a-zA-Z]", ""))
@@ -486,7 +517,7 @@ def q_file_batch_docs(spark: SparkSession, sf: str) -> DataFrame:
             "source",
             "published_at",
             F.length("text").alias("text_len"),
-            F.size(F.split(F.col("text"), r"\s+")).alias("n_tokens"),
+            F.size(F.split(F.col("text"), JAVA_WS + "+")).alias("n_tokens"),
             "processing_job",
             "lineage_enabled",
         )
@@ -544,12 +575,7 @@ def q_repetition_stats(spark: SparkSession, sf: str) -> DataFrame:
     from neuronews_spark.operators.text_stats import repetition_stats
 
     docs = _t(spark, sf, "documents")
-    lined = docs.select(
-        "doc_id",
-        F.regexp_replace(
-            F.col("text"), r"((?:\S+\s+){4}\S+)\s+", "$1\n"
-        ).alias("text"),
-    )
+    lined = _five_word_lines(docs)
     return repetition_stats(lined)
 
 
@@ -564,12 +590,7 @@ def q_clean_corpus(spark: SparkSession, sf: str) -> DataFrame:
     from neuronews_spark.operators.text_stats import clean_corpus
 
     docs = _t(spark, sf, "documents")
-    lined = docs.select(
-        "doc_id",
-        F.regexp_replace(
-            F.col("text"), r"((?:\S+\s+){4}\S+)\s+", "$1\n"
-        ).alias("text"),
-    )
+    lined = _five_word_lines(docs)
     return clean_corpus(lined, min_tokens=15, min_quality_score=0.7)
 
 
@@ -583,12 +604,7 @@ def q_line_dedup_docs(spark: SparkSession, sf: str) -> DataFrame:
     from neuronews_spark.operators.dedup import dedup_lines_across_corpus
 
     docs = _t(spark, sf, "documents")
-    lined = docs.select(
-        "doc_id",
-        F.regexp_replace(
-            F.col("text"), r"((?:\S+\s+){4}\S+)\s+", "$1\n"
-        ).alias("text"),
-    )
+    lined = _five_word_lines(docs)
     out = dedup_lines_across_corpus(lined)
     return out.select(
         "doc_id",
@@ -3098,11 +3114,11 @@ def _cc_over_jaccard_pairs_cte() -> str:
     """Shared WITH RECURSIVE prefix: the verified jaccard pair graph →
     transitive closure (connected components, component = lexicographic
     min id over varchar ids — exactly the Spark CC contract)."""
-    return """
+    return f"""
         WITH RECURSIVE dd AS MATERIALIZED (
           SELECT doc_id, source,
                  list_distinct(list_transform(
-                   list_filter(string_split_regex(text, '[ \\t\\n\\x0b\\f\\r]+'),
+                   list_filter({_ws_split('text', JAVA_WS)},
                                x -> x <> ''),
                    x -> lower(x))) AS toks
           FROM documents),
@@ -3190,7 +3206,7 @@ def _pattern_entities_sql() -> str:
           SELECT doc, etype, conf, trim(s) AS surface
           FROM m0 WHERE trim(s) <> ''),
         collapsed AS (
-          SELECT *, trim(regexp_replace(surface, '\\s+', ' ', 'g')) AS base
+          SELECT *, trim({_ws_collapse('surface', JAVA_WS)}) AS base
           FROM m),
         normed AS (
           SELECT doc, etype, conf, surface,
@@ -3328,8 +3344,7 @@ def _token_shingle_pair_ctes(threshold: float) -> str:
     return f"""
         tk AS (
           SELECT doc_id,
-                 list_filter(string_split_regex(lower(coalesce(text, '')),
-                                                '[ \\t\\n\\x0b\\f\\r]+'),
+                 list_filter({_ws_split("lower(coalesce(text, ''))", JAVA_WS)},
                              t -> t <> '') AS toks
           FROM documents),
         nz AS MATERIALIZED (
@@ -3377,7 +3392,7 @@ def _bpe_chain_ctes(n_merges: int) -> str:
     NULL-guarded CASE, so later steps stay empty too.  chr(31) cannot
     occur inside a symbol (symbols are word characters + '</w>'; the
     guard asserts the vocabulary is chr(31)-free)."""
-    ctes = ["""
+    ctes = [f"""
         w0 AS MATERIALIZED (
           SELECT word, freq,
                  array_to_string(list_transform(
@@ -3386,8 +3401,7 @@ def _bpe_chain_ctes(n_merges: int) -> str:
           FROM (
             SELECT word, count(*)::bigint AS freq FROM (
               SELECT unnest(list_filter(
-                string_split_regex(lower(coalesce(text, '')),
-                                   '[ \\t\\n\\x0b\\f\\r]+'),
+                {_ws_split("lower(coalesce(text, ''))", JAVA_WS)},
                 x -> x <> '')) AS word
               FROM documents)
             GROUP BY word))"""]
@@ -3452,8 +3466,7 @@ def _bpe_token_counts_sql(n_merges: int = 12) -> str:
           FROM w{n_merges}),
         dwords AS (
           SELECT doc_id, unnest(list_filter(
-            string_split_regex(lower(coalesce(text, '')),
-                               '[ \\t\\n\\x0b\\f\\r]+'),
+            {_ws_split("lower(coalesce(text, ''))", JAVA_WS)},
             x -> x <> '')) AS word
           FROM documents),
         agg AS (
@@ -3484,6 +3497,13 @@ def _mention_kernel_parts() -> tuple[str, str]:
     titles_sql = _sql_list(sorted(PERSON_TITLES))
     orgs_sql = _sql_list(sorted(ORG_SUFFIXES))
     cap_seq = r"\b([A-Z][a-z]{1,}(?:\s+[A-Z][a-z]{1,}){0,3})\b"
+    depunct = f"""regexp_replace(
+                   CASE WHEN entity_type = 'Organization'
+                        THEN regexp_replace(lower(name),
+                          '{_org_suffix_re2()}',
+                          ' ', 'g')
+                        ELSE lower(name) END,
+                   '[^\\w\\s]', ' ', 'g')"""
     ctes = f"""
         ker AS MATERIALIZED (
           SELECT conv_id,
@@ -3491,20 +3511,20 @@ def _mention_kernel_parts() -> tuple[str, str]:
                    list_distinct(regexp_extract_all(doc_text, '{cap_seq}', 1)),
                    n -> length(n) >= 3
                         AND NOT list_contains({stop_sql},
-                              string_split_regex(n, '\\s+')[1])
+                              {_ws_split('n', PY_WS)}[1])
                         AND NOT list_contains({stop_sql}, n)) AS kept,
                  list_transform(
-                   list_filter(string_split_regex(doc_text, '\\s+'), w -> w <> ''),
+                   list_filter({_ws_split('doc_text', PY_WS)}, w -> w <> ''),
                    w -> regexp_replace(w, '[.,;:"'']+$', '')) AS stripped
           FROM assembled),
         mentions AS (
           SELECT conv_id, unnest(kept) AS name, stripped FROM ker),
         pos AS (
           SELECT conv_id, name, stripped,
-                 string_split_regex(name, '\\s+') AS toks,
+                 {_ws_split('name', PY_WS)} AS toks,
                  list_position(
                    list_slice(stripped, 2, len(stripped)),
-                   string_split_regex(name, '\\s+')[1]) AS j
+                   {_ws_split('name', PY_WS)}[1]) AS j
           FROM mentions),
         inferred AS (
           SELECT conv_id, name, toks,
@@ -3525,18 +3545,12 @@ def _mention_kernel_parts() -> tuple[str, str]:
           FROM inferred),
         final AS (
           SELECT conv_id, name, entity_type,
-                 trim(regexp_replace(regexp_replace(
-                   CASE WHEN entity_type = 'Organization'
-                        THEN regexp_replace(lower(name),
-                          '{_org_suffix_re2()}',
-                          ' ', 'g')
-                        ELSE lower(name) END,
-                   '[^\\w\\s]', ' ', 'g'), '\\s+', ' ', 'g')) AS norm
+                 trim({_ws_collapse(depunct, PY_WS)}) AS norm
           FROM etyped)"""
-    select = """
+    select = f"""
         SELECT conv_id, name, entity_type, norm,
                lower(entity_type) || ':' || substring(md5(entity_type || ':'
-                 || lower(trim(regexp_replace(name, '\\s+', ' ', 'g')))), 1, 12)
+                 || lower(trim({_ws_collapse('name', PY_WS)}))), 1, 12)
                  AS node_id
         FROM final WHERE norm <> ''"""
     return ctes, select
@@ -3546,10 +3560,9 @@ def _mention_extraction_sql() -> str:
     """DuckDB mirror of q_mention_extraction: rebuild the planted
     transcripts (_planted_conv_ctes), then replay the extraction kernel
     (_mention_kernel_parts) — the SQL twin of
-    mentions.extract_mentions_py, the kernel of the Arrow UDF.  Known
-    gap (latent on the planted corpus): the mirror's RE2 ``\\s+`` word
-    split keeps \\x0b, \\xa0, \\x1c-\\x1f and \\x85 inside a word, where
-    Python's ``str.split()`` splits on them."""
+    mentions.extract_mentions_py, the kernel of the Arrow UDF.  Its word
+    splits use ``PY_WS``, the class of the kernel's ``str.split()``; the
+    capitalised-sequence pattern's ``\\s`` is still RE2's (ADVICE.md)."""
     ctes, select = _mention_kernel_parts()
     return f"""
         WITH {_planted_conv_ctes().strip()},
@@ -3638,11 +3651,10 @@ def _entity_relations_sql() -> str:
     # normalize_name mirrors (functions/normalize.py:49-63): plain and
     # Organization (legal-suffix-stripped) variants — a candidate's type
     # is unknown before the join, so both forms are emitted
-    plain = ("trim(regexp_replace(regexp_replace(lower(s), "
-             "'[^\\w\\s]', ' ', 'g'), '\\s+', ' ', 'g'))")
-    stripped = ("trim(regexp_replace(regexp_replace(regexp_replace(lower(s), "
-                f"'{_org_suffix_re2()}', "
-                "' ', 'g'), '[^\\w\\s]', ' ', 'g'), '\\s+', ' ', 'g'))")
+    depunct = "regexp_replace({}, '[^\\w\\s]', ' ', 'g')"
+    plain = f"trim({_ws_collapse(depunct.format('lower(s)'), PY_WS)})"
+    unsuffixed = f"regexp_replace(lower(s), '{_org_suffix_re2()}', ' ', 'g')"
+    stripped = f"trim({_ws_collapse(depunct.format(unsuffixed), PY_WS)})"
     ker_ctes, ker_select = _mention_kernel_parts()
     return f"""
         WITH {_planted_conv_ctes().strip()},
@@ -3664,9 +3676,9 @@ def _entity_relations_sql() -> str:
           WHERE trim(z[1]) <> '' AND trim(z[2]) <> ''),
         ctoks AS (
           SELECT *,
-                 list_filter(string_split_regex(src_surface, '\\s+'),
+                 list_filter({_ws_split('src_surface', JAVA_WS)},
                              t -> t <> '') AS st,
-                 list_filter(string_split_regex(dst_surface, '\\s+'),
+                 list_filter({_ws_split('dst_surface', JAVA_WS)},
                              t -> t <> '') AS dt
           FROM cand),
         csurf AS (
@@ -3748,7 +3760,7 @@ def _corpus_prep_sql() -> str:
         feat AS MATERIALIZED (
           SELECT doc_id, coalesce(text, '') AS t,
                  length(coalesce(text, '')) AS n_chars,
-                 list_filter(string_split_regex(coalesce(text, ''), '\\s+'),
+                 list_filter({_ws_split("coalesce(text, '')", JAVA_WS)},
                              x -> x <> '') AS toks,
                  length(regexp_replace(coalesce(text, ''),
                                        '[^a-zA-Z]', '', 'g')) AS n_alpha
@@ -4035,14 +4047,13 @@ def _entity_resolution_sql() -> str:
         win AS (
           SELECT component, name,
                  row_number() OVER (PARTITION BY component ORDER BY
-                   len(list_filter(string_split_regex(trim(name), '\\s+'),
+                   len(list_filter({_ws_split('name', JAVA_WS)},
                        x -> x <> '')) DESC,
                    length(name) DESC, name DESC) AS rn
           FROM withc)
         SELECT lower(e.entity_type) || ':'
                  || substring(md5(e.entity_type || ':'
-                      || lower(trim(regexp_replace(w.name, '\\s+', ' ',
-                                                   'g')))), 1, 12)
+                      || lower(trim({_ws_collapse('w.name', PY_WS)}))), 1, 12)
                  AS entity_id,
                e.entity_type,
                w.name AS name,
@@ -4475,7 +4486,7 @@ def _position_ctes() -> str:
     )
     actor_case = "CASE\n              " + "\n              ".join(
         f"WHEN len(cap_{i}) > 2 AND len(cap_{i}) < 80 THEN"
-        f" trim(regexp_replace(cap_{i}, '\\s+', ' ', 'g'))"
+        f" trim({_ws_collapse(f'cap_{i}', JAVA_WS)})"
         for i in range(len(P.ACTOR_PATTERNS))
     ) + "\n              ELSE source_id END"
 
@@ -5075,12 +5086,12 @@ def _doc_actors_sql() -> str:
             AND lower(actor_name) NOT IN ({skip})
             AND (
               regexp_matches(list_extract(
-                regexp_split_to_array(actor_name, '\\s+'), 1), '^[A-Z]')
-              OR (list_extract(regexp_split_to_array(actor_name, '\\s+'), 1)
+                {_ws_split('actor_name', JAVA_WS)}, 1), '^[A-Z]')
+              OR (list_extract({_ws_split('actor_name', JAVA_WS)}, 1)
                     = upper(list_extract(
-                        regexp_split_to_array(actor_name, '\\s+'), 1))
+                        {_ws_split('actor_name', JAVA_WS)}, 1))
                   AND regexp_matches(list_extract(
-                        regexp_split_to_array(actor_name, '\\s+'), 1),
+                        {_ws_split('actor_name', JAVA_WS)}, 1),
                         '[A-Za-z]')))),
         unsuppressed AS (
           SELECT * FROM valid v
@@ -5184,7 +5195,7 @@ def _outlet_transparency_sql() -> str:
         + f"""
         , ftoks AS (
           SELECT source,
-                 list_filter(list_transform(regexp_split_to_array(text, '\\s+'),
+                 list_filter(list_transform({_ws_split('text', JAVA_WS)},
                                             x -> lower(x)),
                              x -> x <> '') AS toks
           FROM documents),
@@ -5256,11 +5267,11 @@ def _corpus_pin(by_lineitem_count: dict[int, int]) -> str:
 # shared DuckDB mirror of the hashed-TF-IDF sparse embed
 # (doc_embedder.hashed_tfidf_features): used by the doc_embeddings oracle
 # and as the exact-side prefix of the text_srp_recall gate
-_HASHED_TFIDF_CTES = """
+_HASHED_TFIDF_CTES = f"""
             WITH toks AS (
               SELECT doc_id AS doc,
                      unnest(list_transform(
-                       list_filter(string_split_regex(text, '\\s+'), x -> x <> ''),
+                       list_filter({_ws_split('text', JAVA_WS)}, x -> x <> ''),
                        x -> lower(x))) AS token
               FROM documents),
             b AS MATERIALIZED (
@@ -5284,6 +5295,7 @@ def oracle_sql() -> dict[str, str]:
     pos_re = r"\b(good|great|excellent|amazing|wonderful|fantastic|positive)\b"
     neg_re = r"\b(bad|terrible|awful|horrible|negative|disappointing)\b"
     cc = _cc_over_jaccard_pairs_cte()
+    fuzzy_clean = _ws_collapse("regexp_replace(lower(text), '[^\\w\\s]', '', 'g')", PY_WS)
     return {
         "emerging_connections": f"""
             WITH {_EDGE_EVENTS_CTE.strip()}
@@ -5342,7 +5354,7 @@ def oracle_sql() -> dict[str, str]:
             u AS (SELECT * FROM c UNION ALL SELECT * FROM j)
             SELECT doc_id, src_format, url, title, source, published_at,
                    length(text) AS text_len,
-                   len(regexp_split_to_array(text, '\\s+')) AS n_tokens,
+                   len({_ws_split('text', JAVA_WS)}) AS n_tokens,
                    'fixture_batch' AS processing_job,
                    true AS lineage_enabled
             FROM u
@@ -5694,7 +5706,7 @@ def oracle_sql() -> dict[str, str]:
         """,
         # mirrors ner_preprocess exactly: collapse/strip regexes, 2048-char
         # budget, last-period backoff past 1024 (0-based), trim
-        "ner_preprocess": """
+        "ner_preprocess": f"""
             WITH rep AS (
               SELECT doc_id,
                      text || '. ' || text || '. ' || text || '. ' || text
@@ -5704,7 +5716,7 @@ def oracle_sql() -> dict[str, str]:
             c AS (
               SELECT doc_id,
                      regexp_replace(
-                       regexp_replace(big, '\\s+', ' ', 'g'),
+                       {_ws_collapse('big', JAVA_WS)},
                        '[^\\w\\s\\.\\,\\;\\:\\!\\?\\-\\(\\)"''\\/]', ' ', 'g')
                        AS t
               FROM rep),
@@ -5730,11 +5742,11 @@ def oracle_sql() -> dict[str, str]:
         # mirrors build_outlet_vectors: frame keyword token counts per
         # source, 'other' = leftover mass, L2-normalised. Sum order in the
         # norm matches the Spark fold (economic..scientific, then other).
-        "outlet_vectors": """
+        "outlet_vectors": f"""
             WITH toks AS (
               SELECT source,
                      list_filter(list_transform(
-                       string_split_regex(text, '\\s+'), x -> lower(x)),
+                       {_ws_split('text', JAVA_WS)}, x -> lower(x)),
                        x -> x <> '') AS t
               FROM documents),
             per AS (
@@ -6115,11 +6127,11 @@ def oracle_sql() -> dict[str, str]:
         """,
         # KL drift: dsir-style quantize-then-order — the ORDER BY runs
         # on the quantized bigint, so both engines rank identically
-        "vocab_kl_drift": """
+        "vocab_kl_drift": f"""
             WITH tk AS MATERIALIZED (
               SELECT (lang = 'en') AS is_b, tok
               FROM (SELECT lang,
-                           unnest(string_split_regex(lower(text), '\\s+'))
+                           unnest({_ws_split('lower(text)', JAVA_WS)})
                              AS tok
                     FROM documents) s
               WHERE tok <> ''),
@@ -6245,7 +6257,7 @@ def oracle_sql() -> dict[str, str]:
             SELECT keyword, count(*) AS n FROM (
               SELECT unnest(list_filter(
                        list_transform(
-                         list_filter(string_split_regex(text, '\\s+'), x -> x <> ''),
+                         list_filter({_ws_split('text', JAVA_WS)}, x -> x <> ''),
                          x -> lower(x)),
                        x -> x NOT IN {_sql_in(_KW_STOPS)} AND length(x) > 2)) AS keyword
               FROM documents)
@@ -6254,8 +6266,7 @@ def oracle_sql() -> dict[str, str]:
         "fuzzy_sort_keys": f"""
             SELECT doc_id,
                    array_to_string(list_sort(list_filter(
-                     string_split(trim(regexp_replace(regexp_replace(
-                       lower(text), '[^\\w\\s]', '', 'g'), '\\s+', ' ', 'g')), ' '),
+                     string_split(trim({fuzzy_clean}), ' '),
                      x -> x <> '' AND x NOT IN {_sql_in(_FUZZY_STOPS)})), ' ')
                    AS fuzzy_key
             FROM documents
@@ -6267,14 +6278,14 @@ def oracle_sql() -> dict[str, str]:
             FROM documents
             GROUP BY md5(lower(substr(text, 1, 80))) HAVING count(*) > 1
         """,
-        "token_stats": """
+        "token_stats": f"""
             SELECT doc_id,
                    length(text) AS n_chars,
-                   len(list_filter(string_split_regex(text, '\\s+'), x -> x <> '')) AS n_tokens,
+                   len(list_filter({_ws_split('text', JAVA_WS)}, x -> x <> '')) AS n_tokens,
                    round(length(regexp_replace(text, '[^a-zA-Z]', '', 'g'))::double
                          / length(text), 6) AS alpha_ratio,
                    round(length(text)::double
-                         / len(list_filter(string_split_regex(text, '\\s+'), x -> x <> '')), 6)
+                         / len(list_filter({_ws_split('text', JAVA_WS)}, x -> x <> '')), 6)
                      AS avg_word_len
             FROM documents
         """,
@@ -6282,7 +6293,7 @@ def oracle_sql() -> dict[str, str]:
             WITH toks AS (
               SELECT doc_id,
                      list_transform(
-                       list_filter(string_split_regex(text, '\\s+'), x -> x <> ''),
+                       list_filter({_ws_split('text', JAVA_WS)}, x -> x <> ''),
                        x -> lower(x)) AS t
               FROM documents),
             langs(lang, words) AS (VALUES
@@ -6306,11 +6317,11 @@ def oracle_sql() -> dict[str, str]:
                      i -> md5(substring(text, i::int, 8)))) AS fp
             FROM documents
         """,
-        "token_jaccard_dups": """
+        "token_jaccard_dups": f"""
             WITH d AS (
               SELECT doc_id, source,
                      list_distinct(list_transform(
-                       list_filter(string_split_regex(text, '\\s+'), x -> x <> ''),
+                       list_filter({_ws_split('text', JAVA_WS)}, x -> x <> ''),
                        x -> lower(x))) AS toks
               FROM documents)
             SELECT a.doc_id AS id_a, b.doc_id AS id_b,
@@ -6388,10 +6399,10 @@ def oracle_sql() -> dict[str, str]:
         # per-row kernel; every fraction is a single integer ratio, so
         # no float-order hazard.  range(1, len(tk)) gives 1-based bigram
         # starts i with i+1 <= len (DuckDB range is half-open).
-        "repetition_stats": """
+        "repetition_stats": f"""
             WITH lined AS MATERIALIZED (
               SELECT doc_id,
-                     regexp_replace(text, '((?:\S+\s+){4}\S+)\s+',
+                     regexp_replace(text, '{_LINE_WRAP_RE}',
                                     '\\1' || chr(10), 'g') AS t
               FROM documents
               WHERE text IS NOT NULL AND length(text) > 0),
@@ -6412,7 +6423,7 @@ def oracle_sql() -> dict[str, str]:
               FROM lcount GROUP BY 1),
             toks AS (
               SELECT doc_id,
-                     list_filter(string_split_regex(t, '\s+'), x -> x <> '') AS tk,
+                     list_filter({_ws_split('t', JAVA_WS)}, x -> x <> '') AS tk,
                      length(t) AS tlen
               FROM lined),
             bigr AS (
@@ -6450,13 +6461,13 @@ def oracle_sql() -> dict[str, str]:
             WITH lined AS MATERIALIZED (
               SELECT doc_id,
                      regexp_replace(coalesce(text, ''),
-                                    '((?:\\S+\\s+){{4}}\\S+)\\s+',
+                                    '{_LINE_WRAP_RE}',
                                     '\\1' || chr(10), 'g') AS t
               FROM documents),
             feat AS MATERIALIZED (
               SELECT doc_id, t,
                      length(t) AS n_chars,
-                     list_filter(string_split_regex(t, '\\s+'),
+                     list_filter({_ws_split('t', JAVA_WS)},
                                  x -> x <> '') AS toks,
                      length(regexp_replace(t, '[^a-zA-Z]', '', 'g')) AS n_alpha
               FROM lined),
@@ -6546,10 +6557,10 @@ def oracle_sql() -> dict[str, str]:
         # string_agg(ORDER BY idx); md5 compared instead of full text.
         # Parallel unnests zip in DuckDB, giving the 0-based line index
         # that matches posexplode.
-        "line_dedup_docs": """
+        "line_dedup_docs": f"""
             WITH lined AS MATERIALIZED (
               SELECT doc_id,
-                     regexp_replace(text, '((?:\\S+\\s+){4}\\S+)\\s+',
+                     regexp_replace(text, '{_LINE_WRAP_RE}',
                                     '\\1' || chr(10), 'g') AS t
               FROM documents
               WHERE text IS NOT NULL AND length(text) > 0),
@@ -6583,11 +6594,10 @@ def oracle_sql() -> dict[str, str]:
         # STRING here (tiny corpus) vs xxhash64 in the operator — equal
         # absent a 2^-64 collision.  Coverage = distinct token indices
         # covered by any duplicated gram's [i, i+12] span.
-        "dup_ngram_coverage": """
+        "dup_ngram_coverage": f"""
             WITH tk AS (
               SELECT doc_id,
-                     list_filter(string_split_regex(lower(text),
-                                                    '[ \\t\\n\\x0b\\f\\r]+'),
+                     list_filter({_ws_split("lower(text)", JAVA_WS)},
                                  x -> x <> '') AS t
               FROM documents),
             base AS MATERIALIZED (
@@ -6624,11 +6634,10 @@ def oracle_sql() -> dict[str, str]:
         # in for the Spark side's xxhash64 gram ids; a hash collision at
         # test scale would mismatch here); short docs fall back to one
         # whole-sequence gram, mirroring token_shingles
-        "ngram_decontamination": """
+        "ngram_decontamination": f"""
             WITH tk AS (
               SELECT doc_id,
-                     list_filter(string_split_regex(lower(coalesce(text, '')),
-                                                    '[ \\t\\n\\x0b\\f\\r]+'),
+                     list_filter({_ws_split("lower(coalesce(text, ''))", JAVA_WS)},
                                  x -> x <> '') AS t
               FROM documents),
             g AS MATERIALIZED (
@@ -6661,11 +6670,10 @@ def oracle_sql() -> dict[str, str]:
         # keeper/loser via windows over string grams; reassembly is
         # string_agg(ORDER BY token idx) vs Spark's in-row array filter —
         # md5 over the token-joined text compared, never the full text
-        "dedup_spans": """
+        "dedup_spans": f"""
             WITH tk AS MATERIALIZED (
               SELECT doc_id,
-                     list_filter(string_split_regex(lower(coalesce(text, '')),
-                                                    '[ \\t\\n\\x0b\\f\\r]+'),
+                     list_filter({_ws_split("lower(coalesce(text, ''))", JAVA_WS)},
                                  x -> x <> '') AS t
               FROM documents),
             base AS MATERIALIZED (
@@ -6740,11 +6748,11 @@ def oracle_sql() -> dict[str, str]:
         # DSIR: per-token weights quantized to bigint micro-nats BEFORE the
         # per-doc sum, so both engines add integers (associative) — the
         # only floats are one ln()/round() per distinct token
-        "dsir_weights": """
+        "dsir_weights": f"""
             WITH tk AS MATERIALIZED (
               SELECT doc_id, (lang = 'en') AS is_t, tok
               FROM (SELECT doc_id, lang,
-                           unnest(string_split_regex(lower(text), '\\s+'))
+                           unnest({_ws_split('lower(text)', JAVA_WS)})
                              AS tok
                     FROM documents) s
               WHERE tok <> ''),
@@ -6816,11 +6824,10 @@ def oracle_sql() -> dict[str, str]:
         # bloom gate: the mirror recomputes the EXACT side (same SQL as
         # ngram_decontamination) and pins the two sketch invariants true —
         # a false negative or out-of-bound FP count hash-mismatches
-        "bloom_decontamination": """
+        "bloom_decontamination": f"""
             WITH tk AS (
               SELECT doc_id,
-                     list_filter(string_split_regex(lower(coalesce(text, '')),
-                                                    '[ \\t\\n\\x0b\\f\\r]+'),
+                     list_filter({_ws_split("lower(coalesce(text, ''))", JAVA_WS)},
                                  x -> x <> '') AS t
               FROM documents),
             g AS MATERIALIZED (
@@ -6991,10 +6998,10 @@ def oracle_sql() -> dict[str, str]:
         # BPE first-iteration pair counts: symbols = chars + '</w>'
         # marker (so range(1, len) is never empty); total tie-break
         # (freq DESC, pair ASC) pins the LIMIT
-        "bpe_top_pairs": """
+        "bpe_top_pairs": f"""
             WITH w AS (
               SELECT tok AS word, count(*) AS freq
-              FROM (SELECT unnest(string_split_regex(lower(text), '\\s+'))
+              FROM (SELECT unnest({_ws_split('lower(text)', JAVA_WS)})
                       AS tok FROM documents) s
               WHERE tok <> '' GROUP BY tok),
             sym AS (
@@ -7013,11 +7020,11 @@ def oracle_sql() -> dict[str, str]:
         """,
         # CCNet tiering: the dsir_weights mirror's cost variant; the
         # bucket compare is one int/int IEEE division vs constants
-        "lm_quality_buckets": """
+        "lm_quality_buckets": f"""
             WITH tk AS MATERIALIZED (
               SELECT doc_id, (lang = 'en') AS is_t, tok
               FROM (SELECT doc_id, lang,
-                           unnest(string_split_regex(lower(text), '\\s+'))
+                           unnest({_ws_split('lower(text)', JAVA_WS)})
                              AS tok
                     FROM documents) s
               WHERE tok <> ''),
@@ -7191,7 +7198,7 @@ def oracle_sql() -> dict[str, str]:
         "assemble_roundtrip": """
             SELECT 'conv_' || doc_id::varchar AS conv_id,
                    text AS doc_text,
-                   greatest(ceil(len(list_filter(string_split_regex(text, '\\s+'),
+                   greatest(ceil(len(list_filter(string_split(text, ' '),
                      x -> x <> ''))::double / 8.0), 1)::bigint AS n_turns
             FROM documents
         """,
@@ -7200,7 +7207,7 @@ def oracle_sql() -> dict[str, str]:
               SELECT doc_id AS doc,
                      unnest(list_filter(
                        list_transform(
-                         list_filter(string_split_regex(text, '\\s+'), x -> x <> ''),
+                         list_filter({_ws_split('text', JAVA_WS)}, x -> x <> ''),
                          x -> lower(x)),
                        x -> regexp_matches(x, '^[a-zA-Z][a-zA-Z0-9]{{2,}}$')
                             AND x NOT IN {_sql_in(_KW_STOPS)})) AS token
@@ -7265,7 +7272,7 @@ def oracle_sql() -> dict[str, str]:
             WITH base AS (
               SELECT doc_id,
                      length(text) AS n_chars,
-                     list_filter(string_split_regex(text, '\\s+'), x -> x <> '') AS toks,
+                     list_filter({_ws_split('text', JAVA_WS)}, x -> x <> '') AS toks,
                      length(regexp_replace(text, '[^a-zA-Z]', '', 'g')) AS n_alpha,
                      length(regexp_replace(text, '[^.,;:!?''"()\\[\\]]', '', 'g')) AS n_punct
               FROM documents),
@@ -7296,16 +7303,14 @@ def oracle_sql() -> dict[str, str]:
                                 THEN 0.25 ELSE 0.0 END, 6) AS q_score
             FROM feat
         """,
-        "bpe_token_count": """
+        "bpe_token_count": f"""
             SELECT doc_id,
                    coalesce(list_sum(list_transform(
-                     list_filter(
-                       string_split_regex(
-                         regexp_replace(text, '([^\\w]|_)+', ' ', 'g'), '\\s+'),
-                       x -> x <> ''),
+                     list_filter({_ws_split('p', JAVA_WS)}, x -> x <> ''),
                      x -> greatest(ceil(length(x) / 4.0), 1))), 0)::bigint
                      AS n_bpe_tokens
-            FROM documents
+            FROM (SELECT doc_id, regexp_replace(text, '([^\\w]|_)+', ' ', 'g') AS p
+                  FROM documents)
         """,
         "sentence_chunks": """
             WITH s0 AS (

@@ -22,6 +22,17 @@ bit-exact ports of the reference's normalizers:
 The Java regexes use ``(?U)`` so ``\\w`` matches the same unicode word
 characters as Python's ``re`` (the reference normalizers run under CPython
 unicode semantics).
+
+Whitespace is defined once, here, as two character classes. Each is one
+regex string that Python ``re``, Java regex and DuckDB's RE2 all read the
+same way; every split or collapse in the package and in the DuckDB
+mirrors is built from one of them:
+
+  * ``JAVA_WS`` — Java's default ``\\s`` (also Python's ``re.ASCII``
+    ``\\s``): the class of every Spark ``split``/``regexp_replace``.
+  * ``PY_WS`` — what ``str.split()`` and Python's Unicode ``\\s`` split on
+    (``str.isspace()``): the class of the reference-ported Python kernels
+    and of their Column twins (``WS_RE``).
 """
 
 from __future__ import annotations
@@ -31,7 +42,13 @@ from pyspark.sql import functions as F
 
 ORG_SUFFIX_RE = r"(?U)\b(inc|llc|corp|corporation|ltd|co|company|plc|gmbh|sa|ag)\b"
 PUNCT_RE = r"(?U)[^\w\s]"
-WS_RE = r"(?U)\s+"
+
+# regex escapes below U+0100, literal characters above (RE2 has no \u)
+JAVA_WS = r"[ \t\n\x0b\f\r]"
+# Java's six, \x1c-\x1f ("\x1c- " runs to the space), \x85, \xa0 and the
+# Unicode spaces; Java's (?U)\s lacks \x1c-\x1f
+PY_WS = r"[\t-\r\x1c- \x85\xa0" "\u1680\u2000-\u200a\u2028\u2029\u202f\u205f\u3000]"
+WS_RE = PY_WS + "+"
 
 # stop words of the sorted-token fuzzy key (data_validation_pipeline.py:258-277)
 FUZZY_STOP_WORDS = [

@@ -33,11 +33,13 @@ from difflib import SequenceMatcher
 
 import numpy as np
 
+from neuronews_spark.functions.normalize import PY_WS
+
 _ORG_SUFFIX = re.compile(
     r"\b(inc|llc|corp|corporation|ltd|co|company|plc|gmbh|sa|ag)\b", re.IGNORECASE
 )
 _PUNCT = re.compile(r"[^\w\s]")
-_WS = re.compile(r"\s+")
+_WS = re.compile(PY_WS + "+")  # what str.split() splits on
 
 PERSON_TYPES = ("Person",)
 
@@ -287,27 +289,4 @@ def jaro_winkler_batch(
                 break
             prefix += 1
         out[i] = j + prefix * prefix_weight * (1.0 - j)
-    return out
-
-
-def char_ngram_cosine_batch(a: np.ndarray, b: np.ndarray, n: int = 3) -> np.ndarray:
-    """Hashed character-n-gram TF cosine (the lexical stand-in for the
-    reference's embedding cosine when no embedding table is supplied)."""
-    out = np.empty(len(a), dtype=np.float64)
-    for i in range(len(a)):
-        s1 = a[i].replace(" ", "")
-        s2 = b[i].replace(" ", "")
-        g1: dict[str, int] = {}
-        g2: dict[str, int] = {}
-        for s, g in ((s1, g1), (s2, g2)):
-            if len(s) < n:
-                g[s] = g.get(s, 0) + 1
-            else:
-                for k in range(len(s) - n + 1):
-                    sh = s[k : k + n]
-                    g[sh] = g.get(sh, 0) + 1
-        dot = sum(c * g2.get(sh, 0) for sh, c in g1.items())
-        n1 = sum(c * c for c in g1.values()) ** 0.5
-        n2 = sum(c * c for c in g2.values()) ** 0.5
-        out[i] = dot / (n1 * n2) if n1 > 0 and n2 > 0 else 0.0
     return out

@@ -41,6 +41,8 @@ import re
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from neuronews_spark.functions.normalize import JAVA_WS, PY_WS
+
 # metadata.py:52-76 (multiline ^ anchors → (?m) inline)
 SAID_RE = (
     r"((?:[A-Z][a-z]+(?:\s+[A-Z][a-z]+){0,3})|(?:[A-Z]{2,}))"
@@ -83,14 +85,14 @@ def valid_name(name: Column) -> Column:
     word capitalised or an acronym (Python str.isupper ≡ no lowercase +
     at least one cased char, ASCII here)."""
     n = F.trim(name)
-    w0 = F.element_at(F.split(n, r"\s+"), 1)
+    w0 = F.element_at(F.split(n, JAVA_WS + "+"), 1)
     caps = w0.rlike("^[A-Z]") | ((w0 == F.upper(w0)) & w0.rlike("[A-Za-z]"))
     return (F.length(n) >= 2) & ~F.lower(n).isin(SKIP_NAMES) & caps
 
 
 def entity_id(name: Column) -> Column:
     """'ent-' + sha1(collapsed lower name)[:12] (metadata.py:137-140)."""
-    canonical = F.regexp_replace(F.lower(F.trim(name)), r"\s+", " ")
+    canonical = F.regexp_replace(F.lower(F.trim(name)), JAVA_WS + "+", " ")
     return F.concat(F.lit("ent-"), F.substring(F.sha1(canonical), 1, 12))
 
 
@@ -284,7 +286,7 @@ def valid_name_py(name: str) -> bool:
 
 
 def entity_id_py(name: str) -> str:
-    canonical = re.sub(r"\s+", " ", name.strip().lower())
+    canonical = re.sub(PY_WS + "+", " ", name.strip().lower())
     return "ent-" + hashlib.sha1(canonical.encode()).hexdigest()[:12]
 
 

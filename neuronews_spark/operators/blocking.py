@@ -181,7 +181,9 @@ def candidate_pairs(
     widest shuffle moves 2 ids instead of 6 strings per raw pair.
     """
     # blocks feeds three consumers (sizes, anti-join, self-join) — pin it
-    blocks = blocks.persist()
+    # as the pipeline's ``_stage`` does: a lazy local checkpoint leaves no
+    # CacheManager entry behind once the pairs are consumed
+    blocks = blocks.localCheckpoint(eager=False)
     sizes = block_stats(blocks)
     capped = sizes.filter(F.col("block_size") > max_block_size).select(
         "block_key", "block_size", "entity_type"

@@ -27,13 +27,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from neuronews_spark.functions.normalize import node_id
+from neuronews_spark.operators.text_stats import ws_tokens
 
 
 def _election_key(name_col) -> F.Column:
     """Total-order election key: (token count, char length, name)."""
-    toks = F.filter(F.split(F.trim(name_col), r"\s+"), lambda t: t != F.lit(""))
     return F.struct(
-        F.size(toks).alias("n_tokens"),
+        F.size(ws_tokens(name_col)).alias("n_tokens"),
         F.length(name_col).alias("n_chars"),
         name_col.alias("name"),
     )

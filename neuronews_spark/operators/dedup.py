@@ -312,9 +312,9 @@ def dup_ngram_coverage(
     and negligible at any realistic corpus size (noted for the mirror,
     which groups by the gram string itself).
     """
-    toks = F.filter(
-        F.split(F.lower(F.col(text_col)), r"\s+"), lambda x: x != ""
-    )
+    # NULL text keeps NULL tokens, so its n_tokens stays NULL
+    text = F.col(text_col)
+    toks = F.when(text.isNotNull(), ws_tokens(F.lower(text)))
     base = df.select(
         F.col(id_col).alias("_id"), toks.alias("_t")
     ).select("_id", "_t", F.size("_t").alias("_L"))
@@ -487,9 +487,9 @@ def remove_duplicate_spans(
     token-drop is per-row array logic (no reassembly shuffle — kept
     tokens never leave their row).
     """
-    toks = F.filter(
-        F.split(F.lower(F.col(text_col)), r"\s+"), lambda x: x != ""
-    )
+    # NULL text keeps NULL tokens, so its n_tokens stays NULL
+    text = F.col(text_col)
+    toks = F.when(text.isNotNull(), ws_tokens(F.lower(text)))
     base = df.select(
         F.col(id_col).alias("_id"), toks.alias("_t")
     ).select("_id", "_t", F.size("_t").alias("_L"))
@@ -588,7 +588,7 @@ def ngram_decontaminate(
     contaminated = n_dirty_grams > 0.
 
     Gram convention matches :func:`token_shingles` / the whitespace
-    tokenizer used corpus-wide: lowercase, split on ``\\s+``; a doc with
+    tokenizer used corpus-wide: lowercase, :func:`ws_tokens`; a doc with
     1 ≤ tokens < n contributes its full token sequence as ONE gram (so
     short eval items — quiz answers, single sentences — are still
     testable, and only collide with equally-short train grams); an
@@ -606,9 +606,7 @@ def ngram_decontaminate(
     """
 
     def _doc_grams(df: DataFrame) -> DataFrame:
-        toks = F.filter(
-            F.split(F.lower(F.col(text_col)), r"\s+"), lambda x: x != ""
-        )
+        toks = ws_tokens(F.lower(F.col(text_col)))
         return df.select(
             F.col(id_col).alias("_id"), toks.alias("_t")
         ).select(
@@ -700,9 +698,7 @@ def bloom_ngram_decontaminate(
     groupBy(eval id).  Returns (eval_id, n_grams, n_dirty_grams_bloom),
     one row per eval doc.
     """
-    toks = F.filter(
-        F.split(F.lower(F.col(text_col)), r"\s+"), lambda x: x != ""
-    )
+    toks = ws_tokens(F.lower(F.col(text_col)))
 
     def _doc_grams(df: DataFrame) -> DataFrame:
         return df.select(

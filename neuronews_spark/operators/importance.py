@@ -32,6 +32,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from neuronews_spark.operators.text_stats import ws_tokens
+
 __all__ = [
     "dsir_scores",
     "importance_sample",
@@ -39,14 +41,6 @@ __all__ = [
     "mixture_weights",
     "vocab_kl_drift",
 ]
-
-
-def _tokens(text: Column) -> Column:
-    """Whitespace tokens of lowercased text (both engines split on the
-    same ``\\s+`` regex; empty strings filtered)."""
-    return F.filter(
-        F.split(F.lower(text), r"\s+"), lambda t: t != F.lit("")
-    )
 
 
 def dsir_scores(
@@ -79,7 +73,7 @@ def dsir_scores(
     toks = docs.select(
         F.col(id_col),
         is_target.alias("_is_t"),
-        F.explode(_tokens(F.col(text_col))).alias("tok"),
+        F.explode(ws_tokens(F.lower(F.col(text_col)))).alias("tok"),
     )
     vocab = toks.groupBy("tok").agg(
         F.count(F.lit(1)).alias("a_c"),
@@ -194,7 +188,7 @@ def lm_cross_entropy(
     toks = docs.select(
         F.col(id_col),
         is_target.alias("_is_t"),
-        F.explode(_tokens(F.col(text_col))).alias("tok"),
+        F.explode(ws_tokens(F.lower(F.col(text_col)))).alias("tok"),
     )
     vocab = toks.groupBy("tok").agg(
         F.count_if(F.col("_is_t")).alias("t_c"),
@@ -314,7 +308,7 @@ def vocab_kl_drift(
     """
     toks = docs.select(
         is_base.alias("_is_b"),
-        F.explode(_tokens(F.col(text_col))).alias("tok"),
+        F.explode(ws_tokens(F.lower(F.col(text_col)))).alias("tok"),
     )
     vocab = toks.groupBy("tok").agg(
         F.count_if(F.col("_is_b")).alias("a_c"),

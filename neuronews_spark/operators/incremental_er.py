@@ -48,9 +48,6 @@ from pyspark.sql.functions import pandas_udf
 
 __all__ = ["attach_increment"]
 
-# kind → priority (reference short-circuit order); lower wins
-_KIND_PRI = {"person": 0, "containment": 1, "fuzzy": 2}
-
 
 def _match_kernel(scorer: str, threshold: float):
     """One Arrow pass over candidate pairs → (kind, score).

@@ -13,10 +13,15 @@ Exact port of the reference's lightweight mention extractor
 
 The extractor is order-sensitive *within one document* (seen-set dedup and
 the preceding-word index both depend on document order), so it runs as an
-Arrow-batched ``pandas_udf`` returning ``array<struct<name,entity_type>>``
-per conversation — one Python invocation per ~10k conversations, not per
-row, with all surrounding plumbing (explode, ids, normalization) in native
+Arrow-batched ``pandas_udf`` — one Python invocation per ~10k
+conversations, not per row. Per conversation it returns four parallel
+arrays (``MENTION_RESULT``: names, types, norms, node_ids); the norm and
+node id are computed in Python by ``simtext.norm_py`` / ``node_id_py``,
+and only the explode, the mention index and the empty-norm filter are
 Column expressions.
+
+Words are ``str.split()`` tokens, as in the reference: the class
+``functions.normalize.PY_WS``.
 """
 
 from __future__ import annotations

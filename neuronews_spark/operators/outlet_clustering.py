@@ -29,6 +29,8 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from neuronews_spark.operators.text_stats import ws_tokens
+
 FRAME_LABELS = ["economic", "security", "humanitarian", "legal",
                 "political", "scientific", "other"]
 
@@ -57,10 +59,8 @@ def build_outlet_vectors(
     vector array<double> over FRAME_LABELS, L2-normalised; 'other' =
     leftover token mass)."""
     kw = frame_keywords or DEFAULT_FRAME_KEYWORDS
-    toks = F.filter(
-        F.transform(F.split(F.col(text_col), r"\s+"), lambda x: F.lower(x)),
-        lambda x: x != F.lit(""),
-    )
+    text = F.col(text_col)
+    toks = F.when(text.isNotNull(), ws_tokens(F.lower(text)))  # NULL text adds nothing
     def _in(words: list[str]):
         # closure factory: a default parameter would make PySpark treat the
         # lambda as its (element, index) two-argument form

@@ -36,6 +36,8 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from neuronews_spark.operators.text_stats import ws_tokens
+
 from neuronews_spark.operators.outlet_clustering import (
     DEFAULT_FRAME_KEYWORDS,
     FRAME_LABELS,
@@ -70,10 +72,8 @@ def frame_diversity(
     average scores (outlet_scorer.py:98-124).  One groupBy on source —
     partial aggregation map-side, no per-outlet driver loop."""
     kw = frame_keywords or DEFAULT_FRAME_KEYWORDS
-    toks = F.filter(
-        F.transform(F.split(F.col(text_col), r"\s+"), lambda x: F.lower(x)),
-        lambda x: x != F.lit(""),
-    )
+    text = F.col(text_col)
+    toks = F.when(text.isNotNull(), ws_tokens(F.lower(text)))  # NULL text: NULL scores
 
     def _in(words: list[str]):
         return lambda t: t.isin(words)

@@ -39,6 +39,8 @@ import re
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from neuronews_spark.functions.normalize import JAVA_WS
+
 # enhanced_entity_extractor.py:136-218
 PATTERNS: dict[str, list[str]] = {
     "PERSON": [
@@ -130,7 +132,7 @@ def normalize_pattern_text(surface: Column, entity_type: Column) -> Column:
     ws-collapse + strip; ORGANIZATION also drops legal suffixes (end-trim
     only afterwards — interior runs of spaces survive, as in the
     reference); PERSON word-capitalizes."""
-    base = F.trim(F.regexp_replace(surface, r"\s+", " "))
+    base = F.trim(F.regexp_replace(surface, JAVA_WS + "+", " "))
     org = F.trim(F.regexp_replace(base, _NORM_SUFFIX_RE, ""))
     person = F.initcap(base)
     return (

@@ -39,6 +39,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from neuronews_spark.operators.positions import TOPIC_TAXONOMY
+from neuronews_spark.operators.text_stats import ws_tokens
 
 # position_tracker.py:35-64
 REVERSAL_RE = (
@@ -76,7 +77,7 @@ def actor_mentioned(text: Column, actor: Column) -> Column:
     """Any ≥4-char actor word appears as a lowercase substring; an actor
     with no such words falls back to whole-name containment
     (position_tracker.py:100-106)."""
-    words = F.filter(F.split(actor, r"\s+"), lambda w: F.length(w) >= 4)
+    words = F.filter(ws_tokens(actor), lambda w: F.length(w) >= 4)
     low = F.lower(text)
     return F.when(
         F.size(words) == 0, low.contains(F.lower(actor))

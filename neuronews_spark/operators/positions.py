@@ -34,6 +34,8 @@ import re
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from neuronews_spark.functions.normalize import JAVA_WS, PY_WS
+
 # positions.py:42-66 — commitment verbs
 COMMITMENT_RE = (
     r"(?i)\b(will\s+\w+|plans?\s+to|intends?\s+to|aims?\s+to|seeks?\s+to|"
@@ -185,7 +187,7 @@ def extract_actor(
             F.trim(F.regexp_extract(sentence, pat, 1)), r"[,.:;]+$", ""
         )
         ok = (F.length(cap) > 2) & (F.length(cap) < 80)
-        norm = F.trim(F.regexp_replace(cap, r"\s+", " "))
+        norm = F.trim(F.regexp_replace(cap, JAVA_WS + "+", " "))
         out = F.when(ok, norm) if out is None else out.when(ok, norm)
     fallback = F.coalesce(
         *(c for c in (author, source_id, source_type) if c is not None),
@@ -286,7 +288,7 @@ def extract_positions(
     for j in range(len(ACTOR_PATTERNS)):
         cap = F.col(f"_cap{j}")
         ok = (F.length(cap) > 2) & (F.length(cap) < 80)
-        norm = F.trim(F.regexp_replace(cap, r"\s+", " "))
+        norm = F.trim(F.regexp_replace(cap, JAVA_WS + "+", " "))
         actor_chain = (
             F.when(ok, norm) if actor_chain is None else actor_chain.when(ok, norm)
         )
@@ -409,7 +411,7 @@ def extract_actor_py(
         if m:
             actor = m.group(1).strip().rstrip(",.:;")
             if 2 < len(actor) < 80:
-                return re.sub(r"\s+", " ", actor).strip()
+                return re.sub(PY_WS + "+", " ", actor).strip()
     return author or source_id or source_type
 
 

@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from neuronews_spark.functions.normalize import normalize_name
+from neuronews_spark.operators.text_stats import ws_tokens
 
 # enhanced_entity_extractor.py:221-256 (minus the LOCATED_IN catch-all)
 RELATIONSHIP_PATTERNS: dict[str, list[str]] = {
@@ -187,10 +188,7 @@ def extract_relations(
         F.col("z.contexts").alias("context"),
     )
 
-    def _toks(col):
-        return F.filter(F.split(col, r"\s+"), lambda t: t != F.lit(""))
-
-    src_toks, dst_toks = _toks(F.col("src_surface")), _toks(F.col("dst_surface"))
+    src_toks, dst_toks = ws_tokens(F.col("src_surface")), ws_tokens(F.col("dst_surface"))
     k = F.sequence(F.lit(1), F.lit(_MAX_SURFACE_TOKENS))
 
     def _norms(surface_arr):

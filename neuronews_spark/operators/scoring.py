@@ -18,11 +18,6 @@ Rules 1-4 run in one Arrow-batched ``pandas_udf`` over (type, norm) pairs —
 ~10k pairs per Python invocation, numpy-vectorized prefilters, difflib only
 on pairs that can clear the threshold. Rule 5 is a broadcast join to the
 embedding table + a vectorized cosine kernel.
-
-The scorer can additionally emit the scale-path scores the north rule names
-(batched Jaro-Winkler, normalized Levenshtein, char-3-gram TF cosine) for
-benchmarking and for threshold-tuned variants; they do not participate in
-the parity decision unless explicitly enabled.
 """
 
 from __future__ import annotations
@@ -42,7 +37,6 @@ from neuronews_spark.functions import simtext
 class ScoringConfig:
     ratio_threshold: float = 0.88  # resolution.py:96
     embedding_threshold: float = 0.83  # resolution.py:98
-    emit_scale_scores: bool = False
 
 
 _SCORE_SCHEMA = T.StructType(
@@ -50,16 +44,12 @@ _SCORE_SCHEMA = T.StructType(
         T.StructField("matched", T.BooleanType()),
         T.StructField("method", T.StringType()),
         T.StructField("score", T.DoubleType()),
-        T.StructField("jaro_winkler", T.DoubleType()),
-        T.StructField("levenshtein_sim", T.DoubleType()),
-        T.StructField("tfidf_cosine", T.DoubleType()),
     ]
 )
 
 
 def _make_scorer(config: ScoringConfig):
     ratio_t = config.ratio_threshold
-    emit_scale = config.emit_scale_scores
 
     @F.pandas_udf(_SCORE_SCHEMA)
     def _score(
@@ -113,23 +103,7 @@ def _make_scorer(config: ScoringConfig):
             method[hit] = "ratio"
             score[hit] = r[ok]
 
-        if emit_scale:
-            jw = simtext.jaro_winkler_batch(na, nb)
-            lev = simtext.levenshtein_sim_batch(na, nb)
-            tf = simtext.char_ngram_cosine_batch(na, nb)
-        else:
-            jw = lev = tf = np.zeros(n, dtype=np.float64)
-
-        return pd.DataFrame(
-            {
-                "matched": matched,
-                "method": method,
-                "score": score,
-                "jaro_winkler": jw,
-                "levenshtein_sim": lev,
-                "tfidf_cosine": tf,
-            }
-        )
+        return pd.DataFrame({"matched": matched, "method": method, "score": score})
 
     return _score
 

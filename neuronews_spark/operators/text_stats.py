@@ -17,6 +17,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from neuronews_spark.functions.normalize import JAVA_WS
+
 POSITIVE_WORDS = ["good", "great", "excellent", "amazing", "wonderful", "fantastic", "positive"]
 NEGATIVE_WORDS = ["bad", "terrible", "awful", "horrible", "negative", "disappointing"]
 
@@ -31,8 +33,12 @@ LANG_STOPWORDS: dict[str, list[str]] = {
 
 
 def ws_tokens(text: Column) -> Column:
-    """Whitespace tokens (empty-safe)."""
-    return F.filter(F.split(F.coalesce(text, F.lit("")), r"\s+"), lambda t: t != F.lit(""))
+    """Whitespace tokens: ``text`` split on runs of ``JAVA_WS``, empty
+    strings dropped; NULL text gives ``[]``. The package's one Spark
+    tokenizer."""
+    return F.filter(
+        F.split(F.coalesce(text, F.lit("")), JAVA_WS + "+"), lambda t: t != F.lit("")
+    )
 
 
 def token_count(text: Column) -> Column:
@@ -42,13 +48,7 @@ def token_count(text: Column) -> Column:
 def bpe_ish_token_count(text: Column) -> Column:
     """Sub-word-ish token estimate: word-piece regex splits on non-alnum and
     camel boundaries; a cheap stand-in for a BPE tokenizer's token count."""
-    pieces = F.filter(
-        F.split(
-            F.regexp_replace(F.coalesce(text, F.lit("")), r"([^\w]|_)+", " "),
-            r"\s+",
-        ),
-        lambda t: t != F.lit(""),
-    )
+    pieces = ws_tokens(F.regexp_replace(text, r"([^\w]|_)+", " "))
     # ~4 chars/token heuristic within each word piece, at least 1 per piece
     return F.aggregate(
         pieces,
@@ -247,7 +247,7 @@ def ner_preprocess(text: Column, max_length: int = 512) -> Column:
     documented for anything else."""
     limit = max_length * 4
     floor_ = max_length * 2
-    t = F.regexp_replace(text, r"\s+", " ")
+    t = F.regexp_replace(text, JAVA_WS + "+", " ")
     t = F.regexp_replace(t, r"[^\w\s\.\,\;\:\!\?\-\(\)\"\'\/]", " ")
     trunc = F.substring(t, 1, limit)
     rev_pos = F.locate(".", F.reverse(trunc))  # 0 when no period
@@ -339,8 +339,8 @@ def repetition_stats(
     hazard and the DuckDB mirror (explode + groupBy shape) matches
     exactly.  Docs with NULL/empty text are dropped, as in char_entropy.
 
-    Whitespace is ASCII-exact by design: tokenization is ``re.ASCII``
-    ``\\s+`` and line trim strips ' ' only, matching Spark ``trim`` /
+    Whitespace is ASCII-exact by design: tokenization splits on
+    ``JAVA_WS`` and line trim strips ' ' only, matching Spark ``trim`` /
     Java ``\\s`` / DuckDB ``trim``+RE2 — Python's Unicode-aware
     ``str.split()``/``str.strip()`` would treat NBSP etc. as separators
     and silently diverge from every mirror.
@@ -361,7 +361,7 @@ def repetition_stats(
 def _repetition_udf():
     """The repetition-stats Arrow kernel as a reusable struct UDF
     (shared by :func:`repetition_stats` and :func:`clean_corpus`)."""
-    _ws = re.compile(r"\s+", flags=re.ASCII)
+    _ws = re.compile(JAVA_WS + "+")
 
     @F.pandas_udf(
         "n_lines bigint, dup_line_frac double, dup_line_char_frac double, "

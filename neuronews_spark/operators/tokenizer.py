@@ -39,26 +39,19 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from neuronews_spark.functions.normalize import JAVA_WS
+from neuronews_spark.operators.text_stats import ws_tokens
+
 __all__ = ["word_counts", "bpe_pair_counts", "bpe_train", "bpe_encode"]
 
 _EOW = "</w>"
-
-# Java's ``\s`` (what ``_words`` splits on): ASCII whitespace only. Python's
-# ``str.split()`` and ``re``'s ``\s`` also split on \xa0, \x1c-\x1f, \x85
-_JAVA_WS = re.compile(r"[ \t\n\x0b\f\r]+")
-
-
-def _words(text: Column) -> Column:
-    """Whitespace tokens of lowercased text (the corpus-wide token
-    convention shared with importance.py / text_stats.py)."""
-    return F.filter(F.split(F.lower(text), r"\s+"), lambda t: t != F.lit(""))
 
 
 def word_counts(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """``(word, freq)`` over the corpus — the table every BPE iteration
     runs on.  One explode + one map-side-combined groupBy."""
     return (
-        docs.select(F.explode(_words(F.col(text_col))).alias("word"))
+        docs.select(F.explode(ws_tokens(F.lower(F.col(text_col)))).alias("word"))
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("freq"))
     )
@@ -197,7 +190,7 @@ def bpe_train(
         for a, b, cnt in chosen:
             step += 1
             merges.append((step, a, b, cnt))
-        # keyed by the pair itself: words are Java ``\s+`` splits, so a
+        # keyed by the pair itself: words are ``JAVA_WS`` splits, so a
         # symbol can hold any non-whitespace character and no separator
         # joins two symbols into an unambiguous string key
         merge_map = F.create_map(
@@ -260,6 +253,9 @@ def bpe_encode(
     rank = {pair: i for i, pair in enumerate(ranked)}
     b_rank = docs.sparkSession.sparkContext.broadcast(rank)
 
+    # word_counts' tokens, in Python: JAVA_WS, not str.split()'s wider class
+    ws_run = re.compile(JAVA_WS + "+")
+
     @pandas_udf("struct<n_words: bigint, n_bpe_tokens: bigint>")
     def encode(text: pd.Series) -> pd.DataFrame:
         rk = b_rank.value
@@ -297,7 +293,7 @@ def bpe_encode(
 
         n_words, n_tok = [], []
         for t in text:
-            ws = [w for w in _JAVA_WS.split((t or "").lower()) if w]
+            ws = [w for w in ws_run.split((t or "").lower()) if w]
             n_words.append(len(ws))
             n_tok.append(sum(word_len(w) for w in ws))
         return pd.DataFrame({"n_words": n_words, "n_bpe_tokens": n_tok})

@@ -182,8 +182,8 @@ class EntityResolutionPipeline:
                     "blocking", capped, "capped_block", "block_key", "block_size"
                 )
                 # block-population totals → cap hit-rate is computable from
-                # lineage alone (blocks is persisted inside candidate_pairs,
-                # so this aggregate reads the cache, not a rebuild)
+                # lineage alone (this aggregate re-derives the block keys,
+                # Column math over the pinned vertices stage)
                 st = block_stats(blocks).agg(
                     F.count(F.lit(1)).alias("n_blocks"),
                     # coalesce: max over an EMPTY block table (empty input)

@@ -35,6 +35,9 @@ CASES = [
     ("Concept", ""),
     ("Person", "O'Brien"),
     ("Organization", "AT&T Inc"),
+    # \x1c-\x1f are str.split() whitespace but not Java's (?U)\s
+    ("Person", "John\x1cSmith"),
+    ("Person", "John\x1fSmith"),
 ]
 
 

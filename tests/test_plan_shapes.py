@@ -82,6 +82,23 @@ def test_candidate_pairs_shuffle_carries_only_ids(spark):
     assert "name_a" in plan  # payload joined back at the end
 
 
+def test_candidate_pairs_leaves_no_cached_block_table(spark):
+    """candidate_pairs pins its block table for its three consumers; the
+    pin must not outlive the call, or every pipeline run in a long-lived
+    session leaves one more cached block table behind."""
+    from neuronews_spark.functions.normalize import node_id
+    from neuronews_spark.operators.blocking import build_blocks, candidate_pairs
+
+    names = ["acme corp", "acme corporation", "globex", "globex inc", "initech"]
+    vertices = spark.createDataFrame(
+        [("Organization", n, n) for n in names], "entity_type string, name string, norm string"
+    ).withColumn("node_id", node_id(F.col("entity_type"), F.col("name")))
+    spark.catalog.clearCache()
+    pairs, _ = candidate_pairs(build_blocks(vertices))
+    assert pairs.count() > 0
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()  # noqa: SLF001
+
+
 def test_minhash_verify_joins_arrays_after_pair_dedup(spark):
     from neuronews_spark.operators.dedup import minhash_near_duplicates
 
