@@ -672,7 +672,11 @@ def q_er_block_stats(spark: SparkSession, sf: str) -> DataFrame:
     by the ER pipeline itself (bench er/er_stress legs)."""
     _prep(spark)
     from neuronews_spark.functions.normalize import fuzzy_sort_key
-    from neuronews_spark.operators.blocking import block_stats_summary
+    from neuronews_spark.operators.blocking import (
+        block_stats_summary,
+        prefix_key,
+        surname_key,
+    )
 
     d = _t(spark, sf, "documents")
     ents = F.expr(r"regexp_extract_all(text, '([a-z]{4,} [a-z]{4,})', 1)")
@@ -696,19 +700,12 @@ def q_er_block_stats(spark: SparkSession, sf: str) -> DataFrame:
         ),
         F.array(
             F.concat_ws(
-                "|",
-                F.lit("f"),
-                F.col("entity_type"),
-                F.substring(F.regexp_replace("norm", " ", ""), 1, 4),
+                "|", F.lit("f"), F.col("entity_type"), prefix_key(F.col("norm"))
             )
         ),
         F.when(
             F.col("entity_type") == "PERSON",
-            F.array(
-                F.concat_ws(
-                    "|", F.lit("p"), F.element_at(F.split(F.col("norm"), " "), -1)
-                )
-            ),
+            F.array(F.concat_ws("|", F.lit("p"), surname_key(F.col("norm")))),
         ).otherwise(F.array().cast("array<string>")),
     )
     blocks = typed.select(F.explode(keys).alias("block_key"))
@@ -1907,9 +1904,7 @@ def q_er_scale_scored_pairs(spark: SparkSession, sf: str) -> DataFrame:
     # real mention surfaces, either-threshold survival — oracled against
     # DuckDB's builtin levenshtein()/jaro_winkler_similarity() (verified
     # formula-identical on 17k random pairs: 0.1 prefix weight, 4-char
-    # prefix, AND the classic 0.7 boost gate — DuckDB gates the boost on
-    # jaro > 0.7, so the kernel runs with boost_threshold=0.7 here; the
-    # ungated variant would diverge on any low-jaro shared-prefix pair)
+    # prefix, AND the classic 0.7 boost gate, simtext.JW_BOOST_GATE)
     _prep(spark)
     from neuronews_spark.operators.conversations import assemble_conversations
     from neuronews_spark.operators.mentions import extract_mentions

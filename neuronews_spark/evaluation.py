@@ -13,29 +13,22 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from neuronews_spark.operators.blocking import candidate_pairs
+
 
 def labeled_same_block_pairs(
     blocks: DataFrame, truth: DataFrame, max_block_size: int = 1000
 ) -> DataFrame:
-    """blocks(block_key, node_id, ...) × truth(node_id, group_id) →
-    distinct same-block pairs labeled ``is_match`` by group equality."""
-    sizes = blocks.groupBy("block_key").count().filter(F.col("count") <= max_block_size)
-    ok = blocks.join(sizes.select("block_key"), "block_key")
-    t = truth.select("node_id", "group_id")
-    lab = ok.select("block_key", "node_id").join(t, "node_id")
-    a = lab.select(
-        "block_key",
-        F.col("node_id").alias("id_a"),
-        F.col("group_id").alias("group_a"),
-    )
-    b = lab.select(
-        "block_key",
-        F.col("node_id").alias("id_b"),
-        F.col("group_id").alias("group_b"),
-    )
+    """blocks(block_key, node_id, ...) × truth(node_id, group_id) → the
+    pipeline's own candidate pairs (``blocking.candidate_pairs``, same
+    cap) whose two ids both have a label, ``is_match`` by group
+    equality."""
+    pairs, _ = candidate_pairs(blocks, max_block_size)
+    ga = truth.select(F.col("node_id").alias("id_a"), F.col("group_id").alias("group_a"))
+    gb = truth.select(F.col("node_id").alias("id_b"), F.col("group_id").alias("group_b"))
     return (
-        a.join(b, "block_key")
-        .filter(F.col("id_a") < F.col("id_b"))
+        pairs.join(ga, "id_a")
+        .join(gb, "id_b")
         .select(
             "id_a",
             "id_b",

@@ -8,22 +8,27 @@ amortized per batch, never per row.
 Semantics ported bit-exact from the reference resolver
 (``/root/reference/src/knowledge_graph/foundation/resolution.py``):
 
-  * ``norm_py``             — resolution.py:28-39 (driver-side mirror of the
-                              Column version in ``functions.normalize``)
+  * ``norm_py``             — resolution.py:28-39 (the Python twin of the
+                              Column version in ``functions.normalize``; the
+                              mention-extraction UDF runs it)
   * ``token_compatible``    — resolution.py:42-50
   * ``person_compatible``   — resolution.py:53-75 (surname equality +
                               injective given-name/initial matching)
+  * ``token_containment``   — resolution.py:197-202
+  * ``match_rules``         — the rule ladder of ``_find_match``
+                              (resolution.py:162-196) over a batch of pairs:
+                              exact → person → containment; the one
+                              definition batch scoring and day-2 attach share
   * ``ratio_batch``         — resolution.py:78-79: exact ``difflib.
                               SequenceMatcher.ratio`` (the 0.88-threshold
                               scorer), with a vectorized length upper-bound
                               prefilter so difflib only runs on pairs that
                               could clear the threshold
-  * ``token_containment``   — resolution.py:197-202
   * ``cosine_batch``        — resolution.py:82-88 (embedding fallback, 0.83)
 
 Plus scale-path scorers the reference doesn't have but the north rule names:
 batched Levenshtein (full-matrix DP vectorized across the batch) and
-Jaro-Winkler, and a hashed char-n-gram TF cosine.
+Jaro-Winkler.
 """
 
 from __future__ import annotations
@@ -100,13 +105,6 @@ def person_compatible(a_norm: str, b_norm: str) -> bool:
     return True
 
 
-def person_compatible_batch(a: np.ndarray, b: np.ndarray) -> np.ndarray:
-    out = np.empty(len(a), dtype=bool)
-    for i in range(len(a)):
-        out[i] = person_compatible(a[i], b[i])
-    return out
-
-
 def token_containment(a_norm: str, b_norm: str) -> bool:
     """Token set of one side contained in the other (resolution.py:197-202)."""
     ta, tb = set(a_norm.split()), set(b_norm.split())
@@ -115,11 +113,37 @@ def token_containment(a_norm: str, b_norm: str) -> bool:
     return ta <= tb or tb <= ta
 
 
-def token_containment_batch(a: np.ndarray, b: np.ndarray) -> np.ndarray:
-    out = np.empty(len(a), dtype=bool)
-    for i in range(len(a)):
-        out[i] = token_containment(a[i], b[i])
-    return out
+def match_rules(
+    etype: np.ndarray, a: np.ndarray, b: np.ndarray
+) -> tuple[np.ndarray, np.ndarray]:
+    """The rule ladder of ``_find_match`` (resolution.py:162-196) over a
+    batch of (type, norm_a, norm_b) pairs, in priority order:
+
+      1. exact        norm_a == norm_b (any type)
+      2. person       ``person_compatible`` (Person only; persons never
+                      fall through to any later rule)
+      3. containment  ``token_containment`` (non-person)
+
+    A pair with an empty side matches no rule. Returns ``(rule, fuzzy)``:
+    each row's rule name (None where no rule fired) and the mask of rows
+    that go on to the caller's fuzzy step (non-person, both sides
+    non-empty, no rule fired)."""
+    n = len(a)
+    rule = np.full(n, None, dtype=object)
+    nonempty = np.fromiter(
+        (bool(x) and bool(y) for x, y in zip(a, b)), dtype=bool, count=n
+    )
+    exact = nonempty & (a == b)
+    rule[exact] = "exact"
+    is_person = etype == "Person"
+    for i in np.flatnonzero(nonempty & ~exact):
+        if is_person[i]:
+            if person_compatible(a[i], b[i]):
+                rule[i] = "person"
+        elif token_containment(a[i], b[i]):
+            rule[i] = "containment"
+    fuzzy = nonempty & ~is_person & np.equal(rule, None)
+    return rule, fuzzy
 
 
 def ratio_batch(a: np.ndarray, b: np.ndarray, threshold: float = 0.0) -> np.ndarray:
@@ -258,29 +282,24 @@ def _jaro(s1: str, s2: str) -> float:
     return (m / l1 + m / l2 + (m - t) / m) / 3.0
 
 
-def jaro_winkler_batch(
-    a: np.ndarray,
-    b: np.ndarray,
-    prefix_weight: float = 0.1,
-    boost_threshold: float = 0.0,
-) -> np.ndarray:
-    """Batched Jaro-Winkler (4-char prefix boost, weight 0.1).
+# Winkler's boost gate: the prefix boost applies only when jaro > 0.7
+JW_BOOST_GATE = 0.7
 
-    ``boost_threshold`` selects between the two published conventions:
-    Winkler's original gates the prefix boost on jaro > 0.7 (what DuckDB's
-    ``jaro_winkler_similarity`` and most C implementations do — pass 0.7
-    to be comparable against them, verified exact on 17k random pairs by
-    ``tests/test_scoring.py``); the ungated variant (default 0.0, e.g.
-    python-jellyfish pre-1.0) always applies the boost and is what the ER
-    scale scorer has used since round 1.  The two differ only when
-    jaro ≤ threshold AND the strings share a prefix — low-similarity
-    pairs that the ER thresholds usually (but not provably) discard.
+
+def jaro_winkler_batch(
+    a: np.ndarray, b: np.ndarray, prefix_weight: float = 0.1
+) -> np.ndarray:
+    """Batched Jaro-Winkler (4-char prefix boost, weight 0.1), with
+    Winkler's original gate: the boost applies only when jaro exceeds
+    ``JW_BOOST_GATE``. That is what DuckDB's ``jaro_winkler_similarity``
+    and most C implementations do, so the kernel is comparable against
+    them (verified exact on 17k random pairs by ``tests/test_scoring.py``).
     """
     out = np.empty(len(a), dtype=np.float64)
     for i in range(len(a)):
         s1, s2 = a[i], b[i]
         j = _jaro(s1, s2)
-        if j <= boost_threshold:
+        if j <= JW_BOOST_GATE:
             out[i] = j
             continue
         prefix = 0

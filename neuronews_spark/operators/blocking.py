@@ -53,6 +53,23 @@ from neuronews_spark.functions.normalize import (
 )
 
 
+# length of the 'f' family's squashed prefix
+PREFIX_LEN = 4
+
+
+def prefix_key(norm: Column) -> Column:
+    """The 'f' key value: the first ``PREFIX_LEN`` characters of the
+    space-stripped norm."""
+    return F.substring(F.regexp_replace(norm, " ", ""), 1, PREFIX_LEN)
+
+
+def surname_key(norm: Column) -> Column:
+    """The 'p' key value: the last space-separated token of the norm
+    ('' for an empty norm, where a filtered token array has no last
+    element and ``element_at`` raises under ANSI)."""
+    return F.element_at(F.split(norm, " "), -1)
+
+
 def block_keys_column(
     entity_type: Column,
     norm: Column,
@@ -60,16 +77,13 @@ def block_keys_column(
     bands: int = 4,
 ) -> Column:
     """Array of blocking keys for one vertex (all modalities, type-scoped)."""
-    squashed = F.regexp_replace(norm, " ", "")
     keys = [
         F.array(F.concat_ws("|", F.lit("x"), entity_type, norm)),
         F.array(F.concat_ws("|", F.lit("s"), entity_type, fuzzy_sort_key(norm))),
-        F.array(
-            F.concat_ws("|", F.lit("f"), entity_type, F.substring(squashed, 1, 4))
-        ),
+        F.array(F.concat_ws("|", F.lit("f"), entity_type, prefix_key(norm))),
         F.when(
             entity_type == F.lit("Person"),
-            F.array(F.concat_ws("|", F.lit("p"), F.element_at(tokens(norm), -1))),
+            F.array(F.concat_ws("|", F.lit("p"), surname_key(norm))),
         ).otherwise(F.array().cast("array<string>")),
         F.transform(
             minhash_band_keys(char_shingles(norm), n_hashes=n_hashes, bands=bands),

@@ -9,7 +9,8 @@ driven per document by kg_updater.update_from_document:193) — the
 you attach increments.  This operator is the batch re-expression: ONE
 job resolves the whole increment.
 
-Semantics (per `_find_match`, in priority order):
+Semantics (per `_find_match`, in priority order; steps 2-3 are
+``simtext.match_rules``, the rule ladder batch scoring runs too):
 
 1. exact — normalized surface equality against the store's registered
    forms (the ``_exact`` dict);
@@ -31,8 +32,9 @@ insertion order, so ties break on ``min(entity_id)`` (and fuzzy on
 partitionings, retries, and engines.
 
 Scale shape: the reference's per-mention scan is O(|store|) per call;
-here candidates come from a blocking join on the squashed-norm prefix
-key (the er_block_stats 'f' family), so the fuzzy work is
+here candidates come from a blocking join on the batch pipeline's own
+key values (``blocking.surname_key`` for persons, ``blocking.prefix_key``
+otherwise: the 'p' and 'f' families), so the fuzzy work is
 O(block-local pairs) with the same recall contract the batch pipeline's
 blocking carries.  Plan: one broadcast-or-hash exact join, one keyed
 candidate join, one Arrow scoring pass over candidates only, one
@@ -46,22 +48,26 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from neuronews_spark.operators.blocking import prefix_key, surname_key
+
 __all__ = ["attach_increment"]
 
 
-def _match_kernel(scorer: str, threshold: float):
+def _attach_kernel(scorer: str, threshold: float):
     """One Arrow pass over candidate pairs → (kind, score).
 
-    kind ∈ person | containment | fuzzy | '' (no match).  Score is the
-    similarity for fuzzy hits (rounded to 6, the cross-engine compare
-    convention), 1.0 for rule hits.
+    kind ∈ person | containment | fuzzy | null (no match): the shared
+    rule ladder ``match_rules``, then the fuzzy scorer on the rows it
+    passes on.  Score is the similarity for fuzzy hits (rounded to 6,
+    the cross-engine compare convention), 1.0 for rule hits.
     """
     from neuronews_spark.functions.simtext import (
         jaro_winkler_batch,
-        person_compatible,
+        match_rules,
         ratio_batch,
-        token_containment,
     )
+
+    similarity = jaro_winkler_batch if scorer == "jaro_winkler" else ratio_batch
 
     @pandas_udf("struct<kind: string, score: double>")
     def kernel(
@@ -69,36 +75,16 @@ def _match_kernel(scorer: str, threshold: float):
     ) -> pd.DataFrame:
         import numpy as np
 
-        n = len(etype)
-        kind = np.full(n, "", dtype=object)
-        score = np.full(n, np.nan)
-        is_person = (etype == "Person").to_numpy()
-        mn = m_norm.to_numpy()
-        sn = s_norm.to_numpy()
-        for i in np.nonzero(is_person)[0]:
-            if person_compatible(mn[i], sn[i]):
-                kind[i], score[i] = "person", 1.0
-        rest = np.nonzero(~is_person)[0]
-        for i in rest:
-            if token_containment(mn[i], sn[i]):
-                kind[i], score[i] = "containment", 1.0
-        todo = np.array(
-            [i for i in rest if kind[i] == ""], dtype=int
-        )
+        mn = m_norm.fillna("").to_numpy(dtype=object)
+        sn = s_norm.fillna("").to_numpy(dtype=object)
+        kind, fuzzy = match_rules(etype.to_numpy(dtype=object), mn, sn)
+        score = np.where(np.equal(kind, None), np.nan, 1.0)
+        todo = np.flatnonzero(fuzzy)
         if len(todo):
-            if scorer == "jaro_winkler":
-                s = jaro_winkler_batch(
-                    mn[todo], sn[todo], boost_threshold=0.7
-                )
-            elif scorer == "difflib":
-                s = ratio_batch(mn[todo], sn[todo])
-            else:  # pragma: no cover - guarded by attach_increment
-                raise ValueError(f"unknown scorer {scorer!r}")
-            s = np.round(s, 6)
+            s = np.round(similarity(mn[todo], sn[todo]), 6)
             hit = s >= threshold
-            for j, i in enumerate(todo):
-                if hit[j]:
-                    kind[i], score[i] = "fuzzy", s[j]
+            kind[todo[hit]] = "fuzzy"
+            score[todo[hit]] = s[hit]
         return pd.DataFrame({"kind": kind, "score": score})
 
     return kernel
@@ -109,7 +95,6 @@ def attach_increment(
     mentions: DataFrame,
     threshold: float = 0.88,
     scorer: str = "difflib",
-    prefix_len: int = 4,
     name_embeddings: DataFrame | None = None,
     embedding_threshold: float = 0.83,
 ) -> DataFrame:
@@ -159,9 +144,8 @@ def attach_increment(
         # rule matches initialized given names, which a squashed-prefix
         # key could never co-locate ('j smith' vs 'john smith')
         return F.when(
-            F.col("entity_type") == "Person",
-            F.element_at(F.split(c, " "), -1),
-        ).otherwise(F.substring(F.regexp_replace(c, " ", ""), 1, prefix_len))
+            F.col("entity_type") == "Person", surname_key(c)
+        ).otherwise(prefix_key(c))
 
     cand = (
         rest.select(
@@ -181,7 +165,7 @@ def attach_increment(
         )
         .drop("block_key")
     )
-    kernel = _match_kernel(scorer, threshold)
+    kernel = _attach_kernel(scorer, threshold)
     scored = cand.select(
         "mention_id",
         "entity_type",
@@ -195,7 +179,7 @@ def attach_increment(
         "entity_id",
         F.col("m.kind").alias("match_kind"),
         F.col("m.score").alias("score"),
-    ).filter(F.col("match_kind") != "")
+    ).filter(F.col("match_kind").isNotNull())
 
     pri = (
         F.when(F.col("match_kind") == "person", F.lit(0))

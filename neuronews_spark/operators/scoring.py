@@ -15,9 +15,10 @@ reference's own global backfill ``canonicalize_store`` effects):
                                              only when vectors are supplied)
 
 Rules 1-4 run in one Arrow-batched ``pandas_udf`` over (type, norm) pairs —
-~10k pairs per Python invocation, numpy-vectorized prefilters, difflib only
-on pairs that can clear the threshold. Rule 5 is a broadcast join to the
-embedding table + a vectorized cosine kernel.
+~10k pairs per Python invocation. Rules 1-3 are ``simtext.match_rules``, the
+ladder day-2 attach (``incremental_er``) runs too; rule 4 is a numpy length
+prefilter, then difflib only on pairs that can clear the threshold. Rule 5
+is a broadcast join to the embedding table + a vectorized cosine kernel.
 """
 
 from __future__ import annotations
@@ -55,54 +56,21 @@ def _make_scorer(config: ScoringConfig):
     def _score(
         etype: pd.Series, norm_a: pd.Series, norm_b: pd.Series
     ) -> pd.DataFrame:
-        n = len(etype)
-        ty = etype.to_numpy(dtype=object)
         na = norm_a.fillna("").to_numpy(dtype=object)
         nb = norm_b.fillna("").to_numpy(dtype=object)
-
-        matched = np.zeros(n, dtype=bool)
-        method = np.full(n, None, dtype=object)
-        score = np.zeros(n, dtype=np.float64)
-
-        nonempty = np.array([bool(x) and bool(y) for x, y in zip(na, nb)])
-
-        # 1. exact normalized equality (any type)
-        exact = (na == nb) & nonempty
-        matched |= exact
-        method[exact] = "exact"
-        score[exact] = 1.0
-
-        is_person = ty == "Person"
-        open_ = ~matched & nonempty
-
-        # 2. persons: name-aware compatibility only
-        p_idx = np.flatnonzero(open_ & is_person)
-        if len(p_idx):
-            ok = simtext.person_compatible_batch(na[p_idx], nb[p_idx])
-            hit = p_idx[ok]
-            matched[hit] = True
-            method[hit] = "person"
-            score[hit] = 1.0
-
-        # 3. non-persons: token containment
-        o_idx = np.flatnonzero(open_ & ~is_person)
-        if len(o_idx):
-            ok = simtext.token_containment_batch(na[o_idx], nb[o_idx])
-            hit = o_idx[ok]
-            matched[hit] = True
-            method[hit] = "containment"
-            score[hit] = 1.0
+        # rules 1-3: the shared ladder
+        method, fuzzy = simtext.match_rules(etype.to_numpy(dtype=object), na, nb)
+        score = (~np.equal(method, None)).astype(np.float64)
 
         # 4. non-persons: difflib ratio >= threshold
-        r_idx = np.flatnonzero(~matched & nonempty & ~is_person)
+        r_idx = np.flatnonzero(fuzzy)
         if len(r_idx):
             r = simtext.ratio_batch(na[r_idx], nb[r_idx], threshold=ratio_t)
             ok = r >= ratio_t
-            hit = r_idx[ok]
-            matched[hit] = True
-            method[hit] = "ratio"
-            score[hit] = r[ok]
+            method[r_idx[ok]] = "ratio"
+            score[r_idx[ok]] = r[ok]
 
+        matched = ~np.equal(method, None)
         return pd.DataFrame({"matched": matched, "method": method, "score": score})
 
     return _score
@@ -195,7 +163,6 @@ def scale_scored_pairs(
     jw_threshold: float = 0.75,
     norm_col: str = "norm",
     type_col: str = "entity_type",
-    jw_boost_threshold: float = 0.7,
 ) -> DataFrame:
     """The north rule's full scale-path scorer surface: prefix-blocked
     candidate pairs scored with BOTH batched normalized Levenshtein and
@@ -203,12 +170,9 @@ def scale_scored_pairs(
     survives if either scorer clears its threshold. Output:
     (entity_type, norm_a, norm_b, lev_sim, jaro_winkler).
 
-    ``jw_boost_threshold`` defaults to Winkler's classic 0.7 boost gate —
-    the convention DuckDB/C implementations use — so the oracled output
-    is comparable against ``jaro_winkler_similarity`` for EVERY pair, not
-    just pairs whose jaro happens to exceed 0.7 (an ungated kernel would
-    silently over-score low-jaro shared-prefix pairs and both inflate
-    survivor counts and mismatch the mirror's values)."""
+    Jaro-Winkler carries Winkler's 0.7 boost gate, the convention
+    DuckDB/C implementations use, so the oracled output is comparable
+    against ``jaro_winkler_similarity`` for every pair."""
 
     @F.pandas_udf(_PAIR_SCORES_SCHEMA)
     def _scores(a: pd.Series, b: pd.Series) -> pd.DataFrame:
@@ -217,9 +181,7 @@ def scale_scored_pairs(
         return pd.DataFrame(
             {
                 "lev_sim": simtext.levenshtein_sim_batch(na, nb),
-                "jaro_winkler": simtext.jaro_winkler_batch(
-                    na, nb, boost_threshold=jw_boost_threshold
-                ),
+                "jaro_winkler": simtext.jaro_winkler_batch(na, nb),
             }
         )
 

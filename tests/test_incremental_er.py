@@ -76,6 +76,7 @@ MENTIONS = [
     ("m10", "Organization", "acme rockets global services"),  # containment
     ("m11", "Concept", "zzz unseen"),         # new
     ("m12", "Concept", "zzz unseen"),         # same surface -> same new id
+    ("m13", "Person", ""),                    # empty norm: surname '' -> new
 ]
 
 

@@ -99,6 +99,20 @@ def test_candidate_pairs_leaves_no_cached_block_table(spark):
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()  # noqa: SLF001
 
 
+def test_build_blocks_keys_an_empty_norm_person(spark):
+    """A Person vertex whose norm is '' gets its keys. The surname key is
+    the last space-split token ('' here); the last element of a filtered
+    token array would raise INVALID_ARRAY_INDEX_IN_ELEMENT_AT under ANSI."""
+    from neuronews_spark.functions.normalize import node_id
+    from neuronews_spark.operators.blocking import build_blocks
+
+    vertices = spark.createDataFrame(
+        [("Person", "", "")], "entity_type string, name string, norm string"
+    ).withColumn("node_id", node_id(F.col("entity_type"), F.col("name")))
+    keys = {r["block_key"] for r in build_blocks(vertices).collect()}
+    assert {"x|Person|", "f|Person|", "p|"} <= keys
+
+
 def test_minhash_verify_joins_arrays_after_pair_dedup(spark):
     from neuronews_spark.operators.dedup import minhash_near_duplicates
 

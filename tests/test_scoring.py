@@ -1,12 +1,11 @@
 """Differential tests for the batched Jaro-Winkler scale scorer
 (functions/simtext.py) against DuckDB's native jaro_winkler_similarity —
 the independent engine the er_scale_scored_pairs oracle compares against.
+The kernel carries Winkler's original boost gate (the 0.1·l·(1-j) boost
+applies only when jaro > 0.7), as DuckDB and most C ports do.
 
-The two published JW conventions differ only in the prefix-boost gate:
-Winkler's original (and DuckDB, and most C ports) applies the 0.1·l·(1-j)
-boost only when jaro > 0.7; the ungated variant (python-jellyfish pre-1.0)
-always applies it.  The kernel exposes boost_threshold to select either;
-these tests pin BOTH behaviors so neither can drift silently.
+Plus a direct check that batch scoring (``score_pairs``) and day-2 attach
+(``attach_increment``) decide hand pairs by the one rule ladder.
 """
 
 from __future__ import annotations
@@ -14,11 +13,13 @@ from __future__ import annotations
 import random
 import string
 
+from difflib import SequenceMatcher
+
 import duckdb
 import numpy as np
 import pytest
 
-from neuronews_spark.functions.simtext import _jaro, jaro_winkler_batch
+from neuronews_spark.functions.simtext import jaro_winkler_batch
 
 
 def _duckdb_jw(pairs: list[tuple[str, str]]) -> np.ndarray:
@@ -36,7 +37,7 @@ def _duckdb_jw(pairs: list[tuple[str, str]]) -> np.ndarray:
 
 
 def test_jw_gated_matches_duckdb_on_random_pairs():
-    """boost_threshold=0.7 must agree with DuckDB bit-for-bit-ish
+    """The gated kernel must agree with DuckDB bit-for-bit-ish
     (<1e-12) on ~17k adversarial random pairs, including short strings,
     shared prefixes, and embedded spaces."""
     rng = random.Random(7)
@@ -62,34 +63,9 @@ def test_jw_gated_matches_duckdb_on_random_pairs():
     mine = jaro_winkler_batch(
         np.array([p[0] for p in pairs], dtype=object),
         np.array([p[1] for p in pairs], dtype=object),
-        boost_threshold=0.7,
     )
     theirs = _duckdb_jw(pairs)
     assert float(np.max(np.abs(mine - theirs))) < 1e-12
-
-
-def test_jw_ungated_vs_gated_relationship():
-    """The ungated kernel equals the gated one wherever jaro > 0.7, and
-    dominates it (adds the boost) on low-jaro shared-prefix pairs."""
-    pairs = [
-        ("martha", "marhta"),  # jaro ≈ 0.944 — boost applies either way
-        ("dixon", "dicksonx"),
-        ("ab sfxdlnwrp", "ab kezaaa"),  # jaro ≈ 0.53, shared prefix
-        ("xyz", "qrs"),  # no prefix, no matches
-    ]
-    a = np.array([p[0] for p in pairs], dtype=object)
-    b = np.array([p[1] for p in pairs], dtype=object)
-    gated = jaro_winkler_batch(a, b, boost_threshold=0.7)
-    ungated = jaro_winkler_batch(a, b)  # default 0.0
-    for i, (s1, s2) in enumerate(pairs):
-        j = _jaro(s1, s2)
-        if j > 0.7:
-            assert gated[i] == ungated[i]
-        else:
-            assert gated[i] == j
-            assert ungated[i] >= gated[i]
-    # the low-jaro shared-prefix pair is where the conventions truly split
-    assert ungated[2] > gated[2]
 
 
 @pytest.mark.parametrize(
@@ -103,16 +79,9 @@ def test_jw_ungated_vs_gated_relationship():
 )
 def test_jw_textbook_values(a, b, expect):
     got = jaro_winkler_batch(
-        np.array([a], dtype=object),
-        np.array([b], dtype=object),
-        boost_threshold=0.7,
+        np.array([a], dtype=object), np.array([b], dtype=object)
     )[0]
     assert abs(got - expect) < 1e-12
-    # the textbook examples all have jaro > 0.7, so both conventions agree
-    assert (
-        jaro_winkler_batch(np.array([a], dtype=object), np.array([b], dtype=object))[0]
-        == got
-    )
 
 
 def test_jw_empty_string_semantics():
@@ -122,6 +91,76 @@ def test_jw_empty_string_semantics():
     before scoring (documented, not accidental)."""
     a = np.array(["", "", "x"], dtype=object)
     b = np.array(["", "x", ""], dtype=object)
-    got = jaro_winkler_batch(a, b, boost_threshold=0.7)
+    got = jaro_winkler_batch(a, b)
     assert got.tolist() == [1.0, 0.0, 0.0]
     assert _duckdb_jw([("", "")])[0] == 0.0
+
+
+# (entity_type, mention norm, store norm, batch rule); every pair has
+# its own block key, so one store holds one form per pair
+LADDER_CASES = [
+    ("Organization", "acme rockets", "acme rockets", "exact"),
+    ("Person", "j smith", "john smith", "person"),
+    # ratio >= 0.88 but another surname: no match (on attach the
+    # surname key already keeps the two apart)
+    ("Person", "anna karlsson", "anna karlssen", None),
+    # same surname, incompatible given names, ratio >= 0.88: persons
+    # never fall through to the fuzzy step
+    ("Person", "anna berg", "anne berg", None),
+    # containment fires before a ratio that also clears 0.88
+    ("Organization", "helix dynamics", "helix dynamics ai", "containment"),
+    ("Concept", "rocket fuels", "rocket fueled", "ratio"),  # ratio == 0.88
+    ("Concept", "big data", "big date", None),  # ratio 0.875
+]
+
+
+def test_batch_and_attach_apply_one_rule_ladder(spark):
+    """score_pairs and attach_increment decide each hand pair by the same
+    rule; the batch 'ratio' is attach's 'fuzzy', no match is 'new'."""
+    from neuronews_spark.operators.incremental_er import attach_increment
+    from neuronews_spark.operators.scoring import score_pairs
+
+    def ratio(a, b):
+        return SequenceMatcher(None, a, b).ratio()
+
+    assert ratio("anna karlsson", "anna karlssen") >= 0.88
+    assert ratio("anna berg", "anne berg") >= 0.88
+    assert ratio("helix dynamics", "helix dynamics ai") >= 0.88
+    assert ratio("rocket fuels", "rocket fueled") == 0.88
+    assert ratio("big data", "big date") == 0.875
+
+    def key(t, norm):
+        return norm.split(" ")[-1] if t == "Person" else norm.replace(" ", "")[:4]
+
+    store_keys = [(t, key(t, s)) for t, _, s, _ in LADDER_CASES]
+    assert len(set(store_keys)) == len(LADDER_CASES)
+
+    batch = {
+        (r["norm_a"], r["norm_b"]): (r["method"], r["score"])
+        for r in score_pairs(
+            spark.createDataFrame(
+                [(t, m, s) for t, m, s, _ in LADDER_CASES],
+                "type string, norm_a string, norm_b string",
+            )
+        ).collect()
+    }
+    store = spark.createDataFrame(
+        [(f"e{i}", t, s) for i, (t, _, s, _) in enumerate(LADDER_CASES)],
+        "entity_id string, entity_type string, norm string",
+    )
+    mentions = spark.createDataFrame(
+        [(f"m{i}", t, m) for i, (t, m, _, _) in enumerate(LADDER_CASES)],
+        "mention_id string, entity_type string, norm string",
+    )
+    attach = {
+        r["mention_id"]: (r["match_kind"], r["score"])
+        for r in attach_increment(store, mentions).collect()
+    }
+    as_attach = {"ratio": "fuzzy", None: "new"}
+    for i, (t, m, s, want) in enumerate(LADDER_CASES):
+        method, score = batch[(m, s)]
+        kind, a_score = attach[f"m{i}"]
+        assert method == want, (m, s, method)
+        assert kind == as_attach.get(want, want), (m, s, kind)
+        if want == "ratio":
+            assert score == a_score == 0.88
