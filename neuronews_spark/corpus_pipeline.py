@@ -52,7 +52,8 @@ def prepare_training_corpus(
     n_shards: int = 8,
     seed: int = 17,
 ) -> tuple[DataFrame, DataFrame]:
-    """Returns ``(audit, summary)`` — both LAZY.
+    """Returns ``(audit, summary)`` — both LAZY; only the shingle tables
+    the near-dup and decontamination operators pin run during the call.
 
     ``audit`` — one row per input doc:
       (id, keep_clean, dup_loser, neardup_loser, contaminated, sampled,

@@ -13,12 +13,8 @@ the only wide ops are groupBys/joins keyed on content hashes or LSH bands.
 
 from __future__ import annotations
 
-from contextlib import contextmanager
-from typing import Iterator
-
 import numpy as np
 import pandas as pd
-from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -31,53 +27,6 @@ from neuronews_spark.operators.text_stats import ws_tokens
 
 
 # ---------------------------------------------------------------- exact
-
-# Shingle caches pinned by minhash_near_duplicates, released on demand:
-# the operator returns a lazy plan whose three branches share the cache,
-# so only the caller knows when consumption is done.
-_PERSISTED: list[DataFrame] = []
-
-
-def release_caches() -> int:
-    """Unpersist EVERY cache pinned by the operators in this module
-    (minhash/SRP/n-gram, including via decontaminate) and return how
-    many were released.  GLOBAL: this also drops caches pinned by plans
-    built earlier and not yet consumed — those plans stay correct but
-    recompute their upstream on next use.  Safe only when every
-    outstanding plan has been fully consumed (the bench/oracle loops'
-    one-plan-at-a-time pattern); for interleaved plans use
-    :func:`cache_scope` instead."""
-    n = 0
-    while _PERSISTED:
-        _PERSISTED.pop().unpersist()
-        n += 1
-    return n
-
-
-@contextmanager
-def cache_scope() -> Iterator[None]:
-    """Scope-local cache release: on exit, unpersist only the caches
-    pinned by operator calls made INSIDE the ``with`` block, leaving
-    earlier pins (plans still live elsewhere) untouched.
-
-    >>> with cache_scope():
-    ...     minhash_near_duplicates(df).collect()   # cache pinned...
-    ... # ...and released here, without touching other live plans
-
-    Caveat: Spark's CacheManager dedupes persists by analyzed plan, so
-    if the SAME operator call on the SAME input is pinned both inside
-    and outside the scope they alias one cache entry, and the scoped
-    release drops it for both — scoping protects distinct plans, not
-    aliases of one plan.
-    """
-    mark = len(_PERSISTED)
-    try:
-        yield
-    finally:
-        inner, _PERSISTED[mark:] = _PERSISTED[mark:], []
-        for df in inner:
-            df.unpersist()
-
 
 def exact_duplicate_groups(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
@@ -122,10 +71,8 @@ def _shingle_frame(
 ) -> DataFrame:
     """(doc, shingles) — distinct lowercase token n-gram shingles per doc,
     empty-shingle docs dropped.  Shared by :func:`minhash_near_duplicates`
-    and :func:`decontaminate` so that when both run over the SAME input
-    in one session (the ``corpus_prep`` composition) their persisted
-    shingle frames have identical analyzed plans and Spark's CacheManager
-    aliases them to ONE cache entry — the corpus is shingled once."""
+    and :func:`decontaminate` so both detectors shingle with one scheme
+    (identical band keys → identical candidate recall)."""
     toks = F.transform(ws_tokens(F.col(text_col)), lambda x: F.lower(x))
     return df.select(
         F.col(id_col).alias("doc"),
@@ -173,15 +120,8 @@ def minhash_near_duplicates(
     64-dim cosine is O(n²·64); the two detectors genuinely want
     different verify topologies.
     """
-    base = _shingle_frame(df, id_col, text_col, shingle_n)
-
-    # Feeds bucketing, the size table, and join-back.  MEMORY_AND_DISK so
-    # a corpus-sized shingle table degrades to disk instead of evicting;
-    # the handle is tracked so long-lived sessions (driver loop, bench)
-    # can release it between queries via release_caches() — a lazy
-    # operator cannot unpersist after its own consumption.
-    base = base.persist(StorageLevel.MEMORY_AND_DISK)
-    _PERSISTED.append(base)
+    # pinned: feeds bucketing, the size table, and join-back
+    base = _shingle_frame(df, id_col, text_col, shingle_n).localCheckpoint(eager=True)
     keyed = base.select(
         "doc",
         F.explode(
@@ -256,9 +196,8 @@ def dedup_lines_across_corpus(
         .filter(F.col("_line") != "")
         # three consumers below (winners agg, semi-join probe, totals agg):
         # without a pin the corpus-wide split/explode re-executes 3×
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .localCheckpoint(eager=True)
     )
-    _PERSISTED.append(lines)
     winners = (
         lines.groupBy("_line")
         .agg(F.min(F.struct("_id", "_idx")).alias("_w"))
@@ -317,9 +256,7 @@ def dup_ngram_coverage(
     toks = F.when(text.isNotNull(), ws_tokens(F.lower(text)))
     base = df.select(
         F.col(id_col).alias("_id"), toks.alias("_t")
-    ).select("_id", "_t", F.size("_t").alias("_L"))
-    base = base.persist(StorageLevel.MEMORY_AND_DISK)
-    _PERSISTED.append(base)
+    ).select("_id", "_t", F.size("_t").alias("_L")).localCheckpoint(eager=True)
     grams = base.filter(F.col("_L") >= n).select(
         "_id",
         F.posexplode(
@@ -402,12 +339,8 @@ def decontaminate(
     The bucket cap counts TRAIN docs per bucket (hot boilerplate buckets
     are a corpus phenomenon; the union version's cap counted both sides,
     differing only by the ≤|eval-in-bucket| margin)."""
-    tb = _shingle_frame(train, id_col, text_col, shingle_n)
-    tb = tb.persist(StorageLevel.MEMORY_AND_DISK)
-    _PERSISTED.append(tb)
-    eb = _shingle_frame(eval_, id_col, text_col, shingle_n)
-    eb = eb.persist(StorageLevel.MEMORY_AND_DISK)
-    _PERSISTED.append(eb)
+    tb = _shingle_frame(train, id_col, text_col, shingle_n).localCheckpoint(eager=True)
+    eb = _shingle_frame(eval_, id_col, text_col, shingle_n).localCheckpoint(eager=True)
 
     def keyed(side: DataFrame) -> DataFrame:
         return side.select(
@@ -492,9 +425,7 @@ def remove_duplicate_spans(
     toks = F.when(text.isNotNull(), ws_tokens(F.lower(text)))
     base = df.select(
         F.col(id_col).alias("_id"), toks.alias("_t")
-    ).select("_id", "_t", F.size("_t").alias("_L"))
-    base = base.persist(StorageLevel.MEMORY_AND_DISK)
-    _PERSISTED.append(base)
+    ).select("_id", "_t", F.size("_t").alias("_L")).localCheckpoint(eager=True)
     grams = base.filter(F.col("_L") >= n).select(
         "_id",
         F.posexplode(
@@ -1150,16 +1081,14 @@ def srp_lsh_near_dups(
 
     r = n_planes // bands
     mask = (1 << r) - 1
-    # persist: the frame below feeds bucket counting, both sides of the
-    # candidate self-join, and the vector join-back — without pinning it
-    # the whole upstream plan (often an embed pipeline) recomputes 4×;
-    # tracked for release_caches() like the minhash shingle cache
+    # pinned: the frame below feeds bucket counting, both sides of the
+    # candidate self-join, and the vector join-back — without a pin the
+    # whole upstream plan (often an embed pipeline) recomputes 4×
     base = df.select(
         F.col(id_col).alias("vid"),
         F.col(vec_col).cast("array<double>").alias("v"),
         sig(F.col(vec_col)).alias("sig"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    _PERSISTED.append(base)
+    ).localCheckpoint(eager=True)
     band_keys = F.array(
         *[
             F.concat_ws(

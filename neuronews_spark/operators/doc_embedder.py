@@ -49,7 +49,6 @@ def hashed_tfidf_features(
     round(tf·idf / l2, 6), idf = ln((N+1)/(df+1)) + 1 (the same smoothed
     formula as tfidf_keywords). Deterministic, UDF-free, oracle-mirrorable.
     """
-    from pyspark import StorageLevel
     from pyspark.sql import Window
 
     toks = F.transform(ws_tokens(F.col(text_col)), lambda x: F.lower(x))
@@ -57,22 +56,15 @@ def hashed_tfidf_features(
         "doc", F.pmod(_bucket(F.col("token")), F.lit(dim)).alias("bucket")
     )
     # ONE scan + one shuffle produces tf; everything downstream (document
-    # frequency, corpus size, weights, norms) derives from the cached tf
+    # frequency, corpus size, weights, norms) derives from the pinned tf
     # frame (≤ n_docs × dim rows — a dim-fold compression of the corpus),
     # so the raw table is never re-read. Pre-rewrite plan read documents
     # 3-4 times.
     tf = (
         t.groupBy("doc", "bucket")
         .agg(F.count(F.lit(1)).alias("tf"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .localCheckpoint(eager=True)
     )
-    # register with the shared operator-cache registry so cache_scope()/
-    # release_caches() free it like every other operator pin — an
-    # untracked persist leaks across a long-lived session's query loop
-    # and silently warms later embed-consuming queries' measurements
-    from neuronews_spark.operators.dedup import _PERSISTED
-
-    _PERSISTED.append(tf)
     n_docs = tf.select(F.countDistinct("doc").alias("n")).first()["n"]
     dfb = (
         tf.groupBy("bucket")

@@ -48,7 +48,7 @@ def pagerank(
         edges.select(F.col("src").alias("node_id"))
         .union(edges.select(F.col("dst").alias("node_id")))
         .distinct()
-        .persist()
+        .localCheckpoint(eager=True)
     )
     n = nodes.count()
     if n == 0:
@@ -145,7 +145,7 @@ def bfs_distances(
         edges.select("src", "dst")
         .union(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
         .distinct()
-        .persist()
+        .localCheckpoint(eager=True)
     )
     if sources is not None:
         # keyed on the FIRST sources column; isolated sources (no edges)
@@ -176,7 +176,6 @@ def bfs_distances(
         # cached blocks — one barrier per round instead of two
         visited = visited.union(nxt)
         frontier = nxt
-    und.unpersist()
     return visited
 
 

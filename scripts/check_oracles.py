@@ -3,7 +3,8 @@
 Runs selected ``queries()`` entries through Spark AND their
 ``oracle_sql()`` mirror through DuckDB at sf0.01, then compares row
 count, column names, and exact cell values (columns sorted by name, rows
-sorted by all columns) — the same contract the driver value-hashes.
+sorted by all columns) — the same contract the driver value-hashes.  A
+query that leaves a cached frame in the session's CacheManager fails too.
 
 Usage: python scripts/check_oracles.py [query ...]   (default: all oracled)
 """
@@ -59,6 +60,8 @@ def main() -> int:
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()  # noqa: SLF001
+    spark.catalog.clearCache()
     con = duckdb.connect()
     for t in TABLES:
         con.sql(f"create view {t} as select * from '{SF}/{t}.parquet'")
@@ -72,12 +75,15 @@ def main() -> int:
         try:
             import time as _time
 
-            from neuronews_spark.operators.dedup import cache_scope
-
             t0 = _time.monotonic()
-            with cache_scope():  # per-plan shingle/SRP caches
-                sdf = queries[name](spark, SF).toPandas()
+            sdf = queries[name](spark, SF).toPandas()
             t1 = _time.monotonic()
+            if not cache_manager.isEmpty():
+                # operators pin shared intermediates with localCheckpoint,
+                # which Spark's ContextCleaner releases; a CacheManager
+                # entry is a persist() nothing ever unpersists
+                spark.catalog.clearCache()
+                raise AssertionError("left a cached frame in the CacheManager")
             odf = con.sql(oracles[name]).df()
             t2 = _time.monotonic()
             timings[name] = (t1 - t0, t2 - t1)

@@ -97,7 +97,7 @@ def test_reference_kernel_mirror_agrees(spark):
         array_to_vector(F.col("embedding").cast("array<double>")).alias(
             "features"
         ),
-    ).persist()
+    ).localCheckpoint(eager=True)
     n = feats.count()
     max_k = min(max_clusters, n // min_cluster_size)
     scored = []
@@ -116,7 +116,6 @@ def test_reference_kernel_mirror_agrees(spark):
         X = [tuple(r.features.toArray()) for r in rows]
         labels = [r.prediction for r in rows]
         scored.append((k, _silhouette_slow(X, labels)))
-    feats.unpersist()
     assert scored, "fixture produced no eligible k — mirror is vacuous"
     mirror_k = max(scored, key=lambda t: t[1])[0]
 

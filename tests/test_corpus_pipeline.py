@@ -3,7 +3,6 @@
 from __future__ import annotations
 
 from neuronews_spark.corpus_pipeline import prepare_training_corpus
-from neuronews_spark.operators.dedup import cache_scope
 
 
 def _words(prefix: str, n: int) -> list[str]:
@@ -31,19 +30,18 @@ def test_prepare_training_corpus_planted_cases(spark):
     eval_docs = spark.createDataFrame(
         [("ev1", text_x)], "doc_id string, text string"
     )
-    with cache_scope():
-        audit, summary = prepare_training_corpus(
-            docs,
-            eval_docs=eval_docs,
-            min_tokens=3,
-            min_quality_score=0.0,
-            jaccard_threshold=0.8,
-            sample_fraction=1.0,
-            n_shards=2,
-            seed=17,
-        )
-        rows = {r["doc_id"]: r for r in audit.collect()}
-        s = summary.collect()[0]
+    audit, summary = prepare_training_corpus(
+        docs,
+        eval_docs=eval_docs,
+        min_tokens=3,
+        min_quality_score=0.0,
+        jaccard_threshold=0.8,
+        sample_fraction=1.0,
+        n_shards=2,
+        seed=17,
+    )
+    rows = {r["doc_id"]: r for r in audit.collect()}
+    s = summary.collect()[0]
 
     assert rows["s1"]["keep_clean"] is False and rows["s1"]["keep"] is False
     assert rows["b2"]["dup_loser"] is True and rows["b2"]["keep"] is False

@@ -28,7 +28,6 @@ from pyspark.sql import functions as F
 from neuronews_spark.operators.dedup import (
     _shingle_frame,
     minhash_near_duplicates,
-    release_caches,
     token_jaccard,
 )
 
@@ -73,19 +72,16 @@ def _exact_pairs(docs):
 @pytest.mark.parametrize("sf", SFS)
 def test_lsh_recall_complete_at_08(spark, sf):
     docs = spark.read.parquet(f"{sf}/documents.parquet")
-    try:
-        lsh = {
-            (r["id_a"], r["id_b"], r["jaccard"])
-            for r in minhash_near_duplicates(
-                docs, "doc_id", "text", jaccard_threshold=0.8
-            ).collect()
-        }
-        exact = {
-            (r["id_a"], r["id_b"], r["jaccard"])
-            for r in _exact_pairs(docs).filter(F.col("jaccard") >= 0.8).collect()
-        }
-    finally:
-        release_caches()
+    lsh = {
+        (r["id_a"], r["id_b"], r["jaccard"])
+        for r in minhash_near_duplicates(
+            docs, "doc_id", "text", jaccard_threshold=0.8
+        ).collect()
+    }
+    exact = {
+        (r["id_a"], r["id_b"], r["jaccard"])
+        for r in _exact_pairs(docs).filter(F.col("jaccard") >= 0.8).collect()
+    }
     assert exact, f"degenerate corpus at {sf}: no pairs at 0.8"
     missed = exact - lsh
     extra = lsh - exact
@@ -96,14 +92,11 @@ def test_lsh_recall_complete_at_08(spark, sf):
 @pytest.mark.parametrize("sf", SFS)
 def test_recall_margin_no_borderline_pairs(spark, sf):
     docs = spark.read.parquet(f"{sf}/documents.parquet")
-    try:
-        borderline = (
-            _exact_pairs(docs)
-            .filter((F.col("jaccard") >= 0.8) & (F.col("jaccard") < 0.85))
-            .collect()
-        )
-    finally:
-        release_caches()
+    borderline = (
+        _exact_pairs(docs)
+        .filter((F.col("jaccard") >= 0.8) & (F.col("jaccard") < 0.85))
+        .collect()
+    )
     assert borderline == [], (
         "pairs in the LSH recall-risk band [0.8, 0.85) — the corpus_prep "
         f"oracle's losslessness margin is gone: {borderline[:5]}"

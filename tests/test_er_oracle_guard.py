@@ -63,8 +63,7 @@ def _lcs(a: str, b: str) -> int:
 
 @pytest.mark.parametrize("sf", SFS)
 def test_deterministic_blocks_reach_every_matched_edge(spark, sf):
-    vertices = _vertices(spark, sf).persist()
-    blocks = build_blocks(vertices).persist()
+    blocks = build_blocks(_vertices(spark, sf)).localCheckpoint(eager=True)
     full_pairs, _ = candidate_pairs(blocks, max_block_size=1000)
     det_blocks = blocks.filter(~F.col("block_key").rlike("^m[0-9]"))
     det_pairs, _ = candidate_pairs(det_blocks, max_block_size=1000)
@@ -76,8 +75,6 @@ def test_deterministic_blocks_reach_every_matched_edge(spark, sf):
         f"{sorted(full_edges - det_edges)[:5]} — the entity_resolution "
         "oracle (which omits the m modality) would diverge"
     )
-    blocks.unpersist()
-    vertices.unpersist()
 
 
 @pytest.mark.parametrize("sf", SFS)

@@ -99,6 +99,47 @@ def test_candidate_pairs_leaves_no_cached_block_table(spark):
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()  # noqa: SLF001
 
 
+@pytest.mark.parametrize(
+    "name",
+    [
+        "corpus_prep",
+        "pagerank_events",
+        "top_influencers",
+        "am_iaa_kappa",
+        "position_followthrough",
+        "text_srp_recall",
+    ],
+)
+def test_registry_queries_leave_no_cached_frame(spark, sf_dir, name):
+    """Operators pin shared intermediates with localCheckpoint, which
+    Spark's ContextCleaner drops once the plan is unreachable. A persist()
+    left in the CacheManager outlives the query, so every run in a
+    long-lived session would leave one more cached frame behind."""
+    import __spark_entry__ as e
+
+    spark.catalog.clearCache()
+    assert e.queries()[name](spark, sf_dir).collect()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()  # noqa: SLF001
+
+
+def test_minhash_plan_survives_a_later_operator_call(spark):
+    """A minhash plan built before another operator call still collects
+    the same rows after that call: its pin is not released by the later
+    call or by that call's own pins."""
+    from neuronews_spark.operators.dedup import minhash_near_duplicates
+
+    def docs(words):
+        return spark.createDataFrame(
+            [(i, f"{words} {i % 3}") for i in range(30)], "doc_id long, text string"
+        )
+
+    outer = minhash_near_duplicates(docs("alpha beta gamma delta epsilon"))
+    expected = {(a, b) for a in range(30) for b in range(a + 1, 30) if a % 3 == b % 3}
+    assert {(r["id_a"], r["id_b"]) for r in outer.collect()} == expected
+    minhash_near_duplicates(docs("zeta eta theta iota kappa")).collect()
+    assert {(r["id_a"], r["id_b"]) for r in outer.collect()} == expected
+
+
 def test_build_blocks_keys_an_empty_norm_person(spark):
     """A Person vertex whose norm is '' gets its keys. The surname key is
     the last space-split token ('' here); the last element of a filtered

@@ -663,21 +663,6 @@ def test_decontaminate_handles_id_overlap_across_sides(spark):
     assert dict(out.dtypes)["train_id"] == "bigint"
 
 
-def test_minhash_release_caches(spark):
-    """minhash pins its shingle table; release_caches unpersists every
-    pinned handle exactly once."""
-    from neuronews_spark.operators import dedup
-
-    dedup.release_caches()  # drain any earlier pins
-    df = spark.createDataFrame(
-        [(1, "a b c d e f"), (2, "a b c d e f")], "doc_id long, text string"
-    )
-    dedup.minhash_near_duplicates(df).collect()
-    assert dedup.release_caches() >= 1
-    assert dedup._PERSISTED == []
-    assert dedup.release_caches() == 0
-
-
 def test_char_entropy_kernel_matches_explode_form(spark):
     """Differential: the round-4 per-row Arrow kernel vs the original
     explode+groupBy plan (still the DuckDB mirror's shape) — byte-equal
@@ -889,36 +874,6 @@ def test_decontaminate_heterogeneous_id_types(spark):
         train, eval_
     ).schema.fields}
     assert schema["eval_id"] == "string" and schema["train_id"] == "bigint"
-
-
-def test_cache_scope_releases_only_inner_pins(spark):
-    """cache_scope must unpersist caches pinned INSIDE the scope and
-    leave earlier pins (plans still live elsewhere) untouched."""
-    from neuronews_spark.operators import dedup
-
-    dedup.release_caches()  # drain
-    docs = spark.createDataFrame(
-        [(i, f"alpha beta gamma delta epsilon {i}") for i in range(30)],
-        "doc_id long, text string",
-    )
-    other = spark.createDataFrame(
-        [(i, f"zeta eta theta iota kappa {i}") for i in range(30)],
-        "doc_id long, text string",
-    )
-    outer = dedup.minhash_near_duplicates(docs)  # pins its shingle cache
-    n_outer = len(dedup._PERSISTED)
-    assert n_outer >= 1
-    with dedup.cache_scope():
-        # NOTE: a distinct input — pinning the IDENTICAL plan inside the
-        # scope would alias the same CacheManager entry, which scoped
-        # release cannot protect (documented in cache_scope)
-        dedup.minhash_near_duplicates(other).collect()
-        assert len(dedup._PERSISTED) > n_outer
-    # inner pins gone, outer pin intact and still cached
-    assert len(dedup._PERSISTED) == n_outer
-    assert dedup._PERSISTED[-1].storageLevel.useMemory
-    outer.collect()  # outer plan still consumable against its live cache
-    assert dedup.release_caches() == n_outer
 
 
 def test_repetition_stats_ascii_whitespace(spark):

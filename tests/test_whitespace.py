@@ -169,11 +169,8 @@ HOSTILE_QUERIES = [
 
 @pytest.mark.parametrize("name", HOSTILE_QUERIES)
 def test_hostile_whitespace_matches_oracle(spark, hostile_sf, name):
-    from neuronews_spark.operators.dedup import cache_scope
-
-    with cache_scope():
-        sdf = entrymod.queries()[name](spark, hostile_sf)
-        s_rows = _sorted_rows(sdf.columns, sdf.collect())
+    sdf = entrymod.queries()[name](spark, hostile_sf)
+    s_rows = _sorted_rows(sdf.columns, sdf.collect())
     with duckdb.connect() as con:
         for t in TABLES:
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{hostile_sf}/{t}.parquet'")
